@@ -4,27 +4,26 @@ Floating-point SUM/AVG is order-dependent; after a shuffle join the
 partial-aggregation order differs run-to-run and engine-to-engine (we
 measured ~1e-16 relative drift vs a DuckDB oracle on sf0.01). To make
 aggregate VALUES exactly reproducible — bitwise, across engines and
-across partitionings — money-like measures are summed in exact decimal
-arithmetic and only the final result is cast back to DOUBLE:
+across partitionings — money-like measures are summed as integers:
+each row contributes its value rounded to 4 decimal places as an
+UNSCALED 64-bit long (x·10^4), and only the per-group total is rescaled
+and cast back to DOUBLE. On the money domain (documented below) that is
+value-identical to the decimal reference the oracles spell:
 
     SUM(x)  ->  CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE)
     AVG(x)  ->  CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(x)
 
-Decimal addition is associative and commutative (integer arithmetic on
-the unscaled value), so the result is independent of row order and of
-the partial/final aggregation split — which also means the same number
-comes out on 1 partition or 10,000. Spark widens sum(DECIMAL(18,4)) to
-DECIMAL(28,4): at scale 4 that holds sums up to 10^24, far beyond 100 TB
-of money columns. The external type stays DOUBLE so downstream schemas
-are unchanged.
+Integer addition is associative and commutative, so the result is
+independent of row order and of the partial/final aggregation split —
+the same number comes out on 1 partition or 10,000. The external type
+stays DOUBLE so downstream schemas are unchanged. Data outside the
+domain fails the query loudly instead of summing to a wrong value.
 
 This matters at scale beyond testing: deterministic aggregates make
 reruns/backfills byte-identical, so downstream diffing and caching work.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -33,21 +32,14 @@ from pyspark.sql import functions as F
 # values (price * (1 - discount)) to 4 places.
 _DECIMAL = "DECIMAL(18,4)"
 
-#: r14 — escape hatch back to the literal DECIMAL(18,4) accumulator for
-#: deployments whose measures fall OUTSIDE the money domain documented
-#: on :func:`money_unscaled` (values with >4 decimal digits, |x|>1e11,
-#: or per-group sums beyond 9.2e14 currency units). The default is the
-#: fast unscaled-long path, bit-equal on the documented domain (proof:
-#: tools/check_money_parity.py, OPTIMIZATION_r14.md).
-EXACT_DECIMAL_SUMS = os.environ.get("SPARK_GRAFT_EXACT_DECIMAL_SUMS", "") == "1"
-
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
 def dec(c: Column | str) -> Column:
-    """Cast a double measure to the exact internal decimal type."""
+    """Cast a double measure to the decimal reference type (what the
+    oracles and the parity proof compare :func:`money_unscaled` with)."""
     return _col(c).cast(_DECIMAL)
 
 
@@ -68,17 +60,16 @@ SQL_EVENTS_NANSAFE = (
 )
 
 
-# --- r14 fast money aggregation -------------------------------------------
+# --- money aggregation: unscaled longs -----------------------------------
 #
-# SUM over DECIMAL(18,4) widens its accumulator to DECIMAL(28,4) — past
-# Spark's 18-digit compact (long-backed) representation — so every input
-# row of the old dsum paid Double.toString -> BigDecimal parse ->
-# setScale(4, HALF_UP) -> non-compact BigDecimal add into an UnsafeRow
-# byte-array slot. That chain was the dominant per-row cost of the
-# headline business KPIs (guide §5; VERDICT r13 #3). For money-domain
-# inputs the identical decimal value is reachable without any BigDecimal:
-# accumulate the UNSCALED value (x·10^4) as a plain 64-bit long and
-# rescale once per group through an exact decimal division.
+# SUM over DECIMAL(18,4) widens to DECIMAL(28,4), past Spark's compact
+# long-backed decimals, so each row would pay a Double.toString ->
+# BigDecimal parse, a HALF_UP rescale and a non-compact BigDecimal add.
+# For money-domain inputs the identical value is reachable without any
+# BigDecimal: accumulate the UNSCALED value (x·10^4) as a plain long and
+# rescale once per group through an exact decimal division. This is the
+# only Spark-side money sum; the decimal spelling lives on only in the
+# oracle strings (sql_dsum/sql_davg/sql_dsum_diff) it is proven against.
 #
 # Parity proof (committed: tools/check_money_parity.py sweep over every
 # consumed (table, expression) at sf0.001/0.01/0.1 + the degenerate
@@ -91,33 +82,42 @@ SQL_EVENTS_NANSAFE = (
 #   which is < 0.5 away for |k| < 1.4e15 — so FLOOR(p) == k exactly, and
 #   k is also what BigDecimal HALF_UP (Spark) and binary rounding
 #   (DuckDB) produce. Ties cannot occur (a ≤4-digit v has no 5th digit).
-# - NULL/NaN/±inf/overflow: the guard maps them to NULL (NaN/inf fail
-#   the range predicate; |unscaled| >= 1e18 would overflow DECIMAL(18,4)
-#   and is excluded the same way; double granularity at 1e18 is 128, so
-#   no boundary leak). NaN/±inf cast to NULL on the exact path too (even
-#   under ANSI); true overflow is the one OUT-OF-DOMAIN divergence: the
-#   exact path RAISES under the engine's ANSI session where the guarded
-#   fast path yields NULL. No fixture or money-domain value reaches it.
+# - NULL/NaN/±inf map to NULL, as the decimal cast does even under ANSI
+#   (they fail the range predicate and the finiteness test behind it).
+#   A finite x with |x·10^4| >= 1e18 overflows DECIMAL(18,4), where the
+#   ANSI cast raises NUMERIC_VALUE_OUT_OF_RANGE; money_unscaled raises
+#   MONEY_DOMAIN_ERROR instead (double granularity at 1e18 is 128, so no
+#   boundary leak). The in-range row pays only the range comparison.
 # - Finisher: SUM(long) -> DECIMAL(38,4) -> /10000 is one HALF_UP
 #   decimal division per GROUP (exact: the quotient has <=4 fractional
 #   digits <= the result scale), then one correctly-rounded cast to
-#   DOUBLE — the same single rounding the old CAST(SUM(...) AS DOUBLE)
-#   performed, valid beyond 2^53 where a double-divide would round twice.
+#   DOUBLE — the same single rounding CAST(SUM(decimal) AS DOUBLE)
+#   performs, valid beyond 2^53 where a double-divide would round twice.
 # - Long-overflow bound: per-group |sum| <= 9.2e18 unscaled = 9.2e14
 #   currency units. At 100 TB TPC-H (SF ~1e5) the largest headline group
-#   (country x date) sums ~1.9e12 units — 480x inside the bound. Set
-#   SPARK_GRAFT_EXACT_DECIMAL_SUMS=1 to restore the literal decimal
-#   accumulator for data outside the documented domain.
+#   (country x date) sums ~1.9e12 units — 480x inside the bound. Past it,
+#   SUM(BIGINT) and long products raise ARITHMETIC_OVERFLOW under ANSI
+#   mode (the Spark 4 default), so nothing wraps silently.
 # ---------------------------------------------------------------------------
+
+#: raise_error text for a finite value beyond DECIMAL(18,4); ``%s`` is
+#: the offending value. Shared by the Column and SQL spellings.
+MONEY_DOMAIN_ERROR = (
+    "money domain violated: %s is outside DECIMAL(18,4) (|x * 1e4| < 1e18)"
+)
 
 
 def money_unscaled(c: Column | str) -> Column:
     """BIGINT unscaled value of ``CAST(c AS DECIMAL(18,4))`` for
-    money-domain doubles: ``FLOOR(x·10^4 + 0.5)``, NULL outside
-    (±10^18) — NaN, ±inf and decimal overflow map to NULL exactly like
-    the decimal cast. See the domain/parity notes above."""
-    p = _col(c) * F.lit(1e4) + F.lit(0.5)
-    return F.when((p > F.lit(-1e18)) & (p < F.lit(1e18)), F.floor(p))
+    money-domain doubles: ``FLOOR(x·10^4 + 0.5)``. NULL, NaN and ±inf map
+    to NULL like the decimal cast; a finite value beyond ±10^18 unscaled
+    raises :data:`MONEY_DOMAIN_ERROR`. See the domain/parity notes above."""
+    x = _col(c)
+    p = x * F.lit(1e4) + F.lit(0.5)
+    return F.when((p > F.lit(-1e18)) & (p < F.lit(1e18)), F.floor(p)).when(
+        F.abs(p) < F.lit(float("inf")),
+        F.raise_error(F.format_string(MONEY_DOMAIN_ERROR, x)),
+    )
 
 
 def money_total(s: Column) -> Column:
@@ -128,17 +128,14 @@ def money_total(s: Column) -> Column:
 
 
 def dsum(c: Column | str) -> Column:
-    """Order-independent SUM for double measures (exact decimal internally,
-    DOUBLE externally). Default: unscaled-long accumulation, bit-equal on
-    the money domain (see above); set SPARK_GRAFT_EXACT_DECIMAL_SUMS=1
-    for the literal DECIMAL(18,4) accumulator."""
-    if EXACT_DECIMAL_SUMS:
-        return F.sum(dec(c)).cast("double")
+    """Order-independent SUM for double measures: unscaled-long
+    accumulation, bit-equal to the DECIMAL(18,4) sum on the money domain
+    (see above), DOUBLE externally."""
     return money_total(F.sum(money_unscaled(c)))
 
 
 def davg(c: Column | str) -> Column:
-    """Order-independent AVG: exact decimal sum divided by non-null count.
+    """Order-independent AVG: :func:`dsum` divided by the non-null count.
 
     Matches SQL ``CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(x)``
     — a single double division on deterministic operands.
@@ -154,14 +151,16 @@ def sql_dsum(expr: str) -> str:
 
 
 def sql_dsum_fast(expr: str) -> str:
-    """Spark-dialect SQL spelling of the r14 unscaled-long money sum —
-    value-identical to :func:`sql_dsum` on the money domain (see the
-    proof block above; oracle strings keep the decimal form). FLOOR on
-    DOUBLE already returns BIGINT in Spark SQL."""
+    """Spark-dialect SQL spelling of :func:`dsum` — value-identical to
+    :func:`sql_dsum` on the money domain and raising outside it, like
+    :func:`money_unscaled` (oracle strings keep the decimal form).
+    FLOOR on DOUBLE already returns BIGINT in Spark SQL."""
     p = f"({expr}) * 1e4 + 0.5"
     return (
-        f"CAST(CAST(SUM(CASE WHEN {p} > -1e18 AND {p} < 1e18 "
-        f"THEN FLOOR({p}) END) AS DECIMAL(38,4)) / 10000 AS DOUBLE)"
+        f"CAST(CAST(SUM(CASE WHEN {p} > -1e18 AND {p} < 1e18 THEN FLOOR({p}) "
+        f"WHEN abs({p}) < double('inf') THEN raise_error(format_string("
+        f"'{MONEY_DOMAIN_ERROR}', {expr})) END) AS DECIMAL(38,4)) / 10000 "
+        "AS DOUBLE)"
     )
 
 
@@ -208,9 +207,7 @@ def sql_dsum_diff(left: str, right: str) -> str:
 def dsum_diff(left: Column | str, right: Column | str) -> Column:
     """Order-independent SUM(left - right) for double measures.
 
-    Fast path: the per-row difference of unscaled longs equals the
-    unscaled difference of the DECIMAL(19,4) subtraction (exact), and is
-    NULL iff either side is NULL — identical term-skipping."""
-    if EXACT_DECIMAL_SUMS:
-        return F.sum(dec(left) - dec(right)).cast("double")
+    The per-row difference of unscaled longs equals the unscaled
+    difference of the DECIMAL(19,4) subtraction (exact), and is NULL iff
+    either side is NULL — identical term-skipping."""
     return money_total(F.sum(money_unscaled(left) - money_unscaled(right)))

@@ -5,10 +5,10 @@ The reference never uses these (SURVEY.md §2.5-§2.6 notes their
 absence), but they are table-stakes for a general analytics engine and
 all map to single Catalyst operators: rollup/cube plan as one Expand +
 hash aggregate (one shuffle); window functions as one sort within the
-partition-key shuffle. Running sums use the decimal-internal trick with
-an explicit ROWS frame and a unique-key tie-break so results are
-deterministic (a RANGE frame over tied timestamps would make running
-values order-dependent).
+partition-key shuffle. Running sums accumulate unscaled longs
+(``determinism.money_unscaled``) over an explicit ROWS frame with a
+unique-key tie-break so results are deterministic (a RANGE frame over
+tied timestamps would make running values order-dependent).
 """
 
 from __future__ import annotations
@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark.determinism import (
     SQL_EVENTS_NANSAFE,
-    dec,
     dsum,
+    money_total,
+    money_unscaled,
     nan_to_null,
     qround,
     sql_dsum,
@@ -210,7 +211,9 @@ def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("o_totalprice").over(w).alias("prev_price"),
         F.lead("o_totalprice").over(w).alias("next_price"),
         F.row_number().over(w).cast("bigint").alias("order_seq"),
-        F.sum(dec("o_totalprice")).over(wf).cast("double").alias("running_total"),
+        money_total(F.sum(money_unscaled("o_totalprice")).over(wf)).alias(
+            "running_total"
+        ),
     )
 
 
@@ -514,7 +517,7 @@ def rolling_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     days-since-epoch (time-valued, unlike the ROWS frames elsewhere —
     all orders inside the interval count, however many there are).
     One shuffle on customer, one sort; the frame slides without
-    re-scanning. Money through the exact-decimal path."""
+    re-scanning. Money through the unscaled-long sum (``determinism``)."""
     o = _orders(spark, sf_dir)
     day = F.datediff(F.col("o_orderdate"), F.to_date(F.lit("1970-01-01")))
     o = o.withColumn("day", day.cast("bigint"))
@@ -527,7 +530,9 @@ def rolling_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         "day",
-        F.sum(dec("o_totalprice")).over(w).cast("double").alias("rev_30d"),
+        money_total(F.sum(money_unscaled("o_totalprice")).over(w)).alias(
+            "rev_30d"
+        ),
         F.count("*").over(w).cast("bigint").alias("orders_30d"),
     )
 
@@ -1322,7 +1327,7 @@ def supplier_service_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: ONE fact aggregation keyed on suppkey (return counts fused
     as a conditional sum — no second scan), then broadcast joins to
     supplier and nation. Revenue multiplies in double per row
-    (IEEE-exact) and sums through decimals; the rate is one qround'd
+    (IEEE-exact) and sums through ``dsum``; the rate is one qround'd
     division of exact counts."""
     from datapipeline_gcp_spark.determinism import qround
 
@@ -1529,7 +1534,7 @@ def orders_monthly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     short of).
 
     The lag windows are GLOBAL but run at MONTH cardinality (the heavy
-    lifting is the one exact-decimal aggregation below them); lag(12)
+    lifting is the one ``dsum`` aggregation below them); lag(12)
     is valid because TPC-H order dates populate every month — a gapped
     calendar would need the `events_resample_ffill` grid first, which
     is why that operator exists."""
@@ -1689,7 +1694,7 @@ LIMIT {BASKET_TOP_K}
 def _rfm_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM rollup shared by the ntile and broadcast-cuts
     twins: (o_custkey, r_days vs the corpus max date, n_orders,
-    exact-decimal monetary). One definition so a future change to the
+    ``dsum`` monetary). One definition so a future change to the
     reference date or the spend aggregation cannot desynchronize the
     twins (their agreement test assumes identical ingredients)."""
     o = load_testdata(spark, sf_dir, ("orders",))["orders"]
@@ -1733,8 +1738,8 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the segments marketing actually consumes).
 
     Per customer: days since last order (vs the corpus max date —
-    data-derived, so the query is reproducible), order count, exact-
-    decimal spend; each metric quintiled with ``ntile(5)`` over a TOTAL
+    data-derived, so the query is reproducible), order count,
+    ``dsum`` spend; each metric quintiled with ``ntile(5)`` over a TOTAL
     order (metric + custkey tie-break — without the tie-break ntile is
     partition-order-dependent and hash-unstable), oriented so 5 = best;
     then a rule-based segment label. One aggregation + three window

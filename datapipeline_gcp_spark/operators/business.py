@@ -16,8 +16,8 @@ All are single hash aggregations: Spark plans partial (map-side) +
 final HashAggregate, so the shuffle carries pre-combined groups — the
 right shape at 100 TB. The mixed COUNT(DISTINCT)+SUM aggregates use
 Catalyst's expand-based distinct rewrite automatically. Money SUM/AVG
-go through exact decimal internals (see ``determinism``) so results are
-order- and partitioning-independent.
+accumulate unscaled longs (see ``determinism``), so results are order-
+and partitioning-independent and out-of-domain money fails loudly.
 """
 
 from __future__ import annotations
@@ -26,9 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark.determinism import (
-    EXACT_DECIMAL_SUMS,
     davg,
-    dec,
     dsum,
     dsum_diff,
     money_total,
@@ -37,7 +35,7 @@ from datapipeline_gcp_spark.determinism import (
     sql_dsum,
     sql_dsum_diff,
 )
-from datapipeline_gcp_spark.operators.master import MASTER_ORACLE, master_from_testdata
+from datapipeline_gcp_spark.operators.master import MASTER_ORACLE
 from datapipeline_gcp_spark.schemas import load_testdata
 
 def _country_date() -> list:
@@ -144,16 +142,6 @@ BUILDERS = {
 # literal >0/=0 semantics on generated fixtures with real zero incomes.
 
 
-def _retention_master(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = master_from_testdata(spark, sf_dir)
-    return m.withColumn(
-        "income",
-        F.when(F.col("transaction_id") % 7 == 0, F.lit(0.0)).otherwise(
-            F.col("income")
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Order-grain fast path (VERDICT r11 #1 — the bench floor).
 #
@@ -164,14 +152,14 @@ def _retention_master(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate (and a 3-key distinct rewrite over them), pre-count lineitems
 # per order key (map-side partial over one int column) and aggregate at
 # order grain with multiplicity-weighted measures — ~4x fewer rows into
-# every aggregate and no lineitem-grain decimal arithmetic. At 100 TB the
+# every aggregate and no lineitem-grain money arithmetic. At 100 TB the
 # same rewrite turns the dominant shuffle (master fan-out rows) into a
 # count-shuffle of one bigint per order.
 #
 # EXACTNESS (holds for ARBITRARY data, proven against the unchanged
 # master oracle every round incl. the degenerate sweeps):
-# - decimal aggregation is integer arithmetic on unscaled values, so
-#   SUM(dec(x)) over n identical copies == SUM(dec(x) * n): bit-equal.
+# - money aggregation is integer arithmetic on unscaled values, so
+#   SUM(u(x)) over n identical copies == SUM(u(x) * n): bit-equal.
 # - COUNT(x) over master == SUM(n for rows with x non-null) (x is
 #   order-level, so all n copies are null together).
 # - COUNT(DISTINCT k) is unchanged: a key value exists at order grain
@@ -211,26 +199,15 @@ def _order_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: _n as DECIMAL(10,0): decimal x decimal keeps the product exact within
-#: precision 38 (18+10+1 = 29 at scale 4); a raw bigint operand would
-#: push Spark past precision 38 and trigger rounding. (Exact-path only.)
-def _nd() -> Column:
-    return F.col("_n").cast("decimal(10,0)")
-
-
-# r14: the weighted sums follow determinism's unscaled-long fast path —
-# unscaled(dec(c) * n) == unscaled(dec(c)) * n exactly (the decimal
-# product was integer arithmetic on the unscaled value already), so the
-# per-row non-compact DECIMAL(29,4) multiply+add collapses to long
-# multiply+add. Per-row product bound: |u| <= 1e10 (money <= 1e6) times
-# lineitems-per-order (<= 7 in TPC-H) stays ~1e11 << 2^63; the group-sum
-# bound is documented in determinism.py.
+# The weighted sums use determinism's unscaled longs: the per-row
+# product u(c) * n stays a long multiply (|u| <= 1e10 for money <= 1e6,
+# times <= 7 lineitems per order in TPC-H, is ~1e11 << 2^63). Outside
+# that shape the product and the group SUM raise ARITHMETIC_OVERFLOW
+# under ANSI instead of wrapping; determinism.py documents both bounds.
 
 
 def _wsum(c: str) -> Column:
-    """Weighted twin of determinism.dsum: SUM(dec(c) * _n) as double."""
-    if EXACT_DECIMAL_SUMS:
-        return F.sum(dec(c) * _nd()).cast("double")
+    """Weighted twin of determinism.dsum: SUM(u(c) * _n) as double."""
     return money_total(F.sum(money_unscaled(c) * F.col("_n")))
 
 
@@ -241,8 +218,6 @@ def _wcount(c: str) -> Column:
 
 def _wsum_diff(left: str, right: str) -> Column:
     """Weighted twin of determinism.dsum_diff."""
-    if EXACT_DECIMAL_SUMS:
-        return F.sum((dec(left) - dec(right)) * _nd()).cast("double")
     return money_total(
         F.sum((money_unscaled(left) - money_unscaled(right)) * F.col("_n"))
     )
@@ -307,31 +282,25 @@ def _order_grain_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _orderpart_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(orders-row x part) grain for the product-keyed KPIs (A4/A5):
     lineitem pre-aggregated by (l_orderkey, l_partkey) into ``_n`` (row
-    multiplicity) and ``_q`` (exact decimal quantity sum), then joined
-    to orders and customer. The pre-agg shuffles 2 longs + a decimal +
-    a count instead of the 11-column partial-aggregate state the
-    master-grain plan exchanges, and collapses the lineitem grain
-    BEFORE the joins.
+    multiplicity) and ``_q`` (unscaled-long quantity sum), then joined
+    to orders and customer. The pre-agg shuffles four longs instead of
+    the 11-column partial-aggregate state the master-grain plan
+    exchanges, and collapses the lineitem grain BEFORE the joins.
 
     EXACTNESS (same argument as _order_grain): quantity is the only
-    lineitem-grain measure these KPIs touch and it pre-sums exactly in
-    decimal; all other measures are order-level and weight by ``_n``.
+    lineitem-grain measure these KPIs touch and it pre-sums exactly as
+    unscaled longs; all other measures are order-level and weight by
+    ``_n``.
     transaction_count must REMAIN a COUNT(DISTINCT o_orderkey) here —
     two identical-keyed orders rows (dupkeys variant has 150) land in
     the same group as two grain rows, and only distinct-counting
     collapses them the way the master-grain plan does."""
     t = load_testdata(spark, sf_dir, ("customer", "orders", "lineitem"))
-    # _q: exact decimal quantity pre-sum — on the fast path the state is
-    # the unscaled long (quantity <= 50 -> per-order-part sums are tiny);
-    # _total_quantity() rescales once per output group.
-    _q_agg = (
-        F.sum(dec("l_quantity"))
-        if EXACT_DECIMAL_SUMS
-        else F.sum(money_unscaled("l_quantity"))
-    )
+    # _q stays unscaled (quantity <= 50 -> per-order-part sums are
+    # tiny); _total_quantity() rescales once per output group.
     li = t["lineitem"].groupBy("l_orderkey", "l_partkey").agg(
         F.count(F.lit(1)).alias("_n"),
-        _q_agg.alias("_q"),
+        F.sum(money_unscaled("l_quantity")).alias("_q"),
     )
     return (
         t["orders"]
@@ -356,8 +325,6 @@ def _orderpart_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _total_quantity() -> Column:
     """SUM of the _q pre-sums back to DOUBLE (grain-matched finisher)."""
-    if EXACT_DECIMAL_SUMS:
-        return F.sum(F.col("_q")).cast("double")
     return money_total(F.sum(F.col("_q")))
 
 
@@ -432,13 +399,6 @@ SELECT * REPLACE (
   CASE WHEN transaction_id % 7 = 0 THEN 0.0 ELSE income END AS income
 ) FROM ({MASTER_ORACLE})
 """
-
-
-def _q(builder, master_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return builder(master_fn(spark, sf_dir))
-
-    return run
 
 
 QUERIES = {

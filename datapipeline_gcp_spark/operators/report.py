@@ -13,14 +13,14 @@ column names (``date_time``, ``transaction_id``/``campaign_id``,
 ``country``). ``PARSE_TIME('%T', ...)`` becomes an ``HH:mm:ss`` string
 (Spark has no TIME column type; the column is dropped by the final
 projection in the reference too). ``CAST(... AS FLOAT64)`` becomes a
-deterministic decimal-internal sum cast to DOUBLE (see ``determinism``).
+deterministic money sum cast to DOUBLE (see ``determinism``).
 
 The same query template renders for Spark SQL and for the DuckDB oracle
-(the timestamp-format function differs, and — r14 — the money sums
-render as the unscaled-long fast form on the Spark side only, the
-decimal form in the oracle; see ``determinism.sql_dsum_fast``), so the
-WITH chain is executed natively by both engines — no DataFrame
-translation layer.
+(the timestamp-format function differs, and the money sums render as
+the engine's unscaled-long sum on the Spark side, which raises outside
+the money domain, and as the decimal reference in the oracle; see
+``determinism.sql_dsum_fast``), so the WITH chain is executed natively
+by both engines — no DataFrame translation layer.
 
 Scale: the whole report is two scan→partial-agg pipelines unioned and
 re-aggregated; Spark executes it as hash aggregates with map-side
@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datapipeline_gcp_spark.determinism import sql_dsum_fast
+from datapipeline_gcp_spark.determinism import sql_dsum, sql_dsum_fast
 
 _TEMPLATE = """
 WITH tranx AS (
@@ -122,16 +122,16 @@ def render(
         fmt = "date_time"
     else:
         fmt = _SPARK_FMT if dialect == "spark" else _DUCKDB_FMT
-    # Money sums: the Spark dialect renders the r14 unscaled-long fast
-    # form (bit-equal on the money domain — determinism.sql_dsum_fast;
-    # the oracle/DuckDB dialect keeps the literal decimal accumulator,
-    # which is exactly what the hash comparison then proves). as_landed
+    # Money sums: the Spark dialect renders the engine's unscaled-long
+    # sum (bit-equal on the money domain — determinism.sql_dsum_fast;
+    # the oracle/DuckDB dialect keeps the decimal reference, which is
+    # exactly what the hash comparison then proves). as_landed
     # keeps the literal CAST chain on BOTH engines — its point is
     # byte-fidelity with the reference's string-typed landing SQL.
     def _msum(expr: str) -> str:
         if dialect == "spark" and not as_landed:
             return sql_dsum_fast(expr)
-        return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE)"
+        return sql_dsum(expr)
 
     return _TEMPLATE.format(
         fmt_dt=fmt,
@@ -139,20 +139,6 @@ def render(
         campaigns_src=campaigns_src,
         msum_income=_msum("income"),
         msum_cost=_msum("cost"),
-    )
-
-
-def revenue_report(
-    spark: SparkSession,
-    transactions_table: str = "raw_layer.r_transactions",
-    campaigns_table: str = "raw_layer.r_campaigns",
-) -> DataFrame:
-    """Reference-shaped report over the raw-layer catalog tables."""
-    return spark.sql(
-        render(
-            f"SELECT * FROM {transactions_table}",
-            f"SELECT * FROM {campaigns_table}",
-        )
     )
 
 

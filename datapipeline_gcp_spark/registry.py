@@ -119,9 +119,9 @@ _RECHECK: dict[str, int] = {
     "graph_triangles": 14,
     "udf_nfkc_normalize": 14,
     # r14: every query whose money aggregates moved to the unscaled-long
-    # fast path (determinism.dsum/davg/dsum_diff fast forms, the
-    # business weighted sums, and the report template's Spark-dialect
-    # rendering) — the implementing expression changed under them.
+    # sum (determinism.dsum/davg/dsum_diff, the business weighted sums,
+    # and the report template's Spark-dialect rendering) — the
+    # implementing expression changed under them.
     "b_sales_kpi": 14,
     "b_performance_metrics": 14,
     "b_profitability_kpi": 14,
@@ -143,6 +143,10 @@ _RECHECK: dict[str, int] = {
     "events_stream_tumbling_gate": 14,
     "events_stream_session_gate": 14,
     "cte_revenue_report": 14,
+    # r15: the running/rolling window money sums left the DECIMAL(18,4)
+    # accumulator for the same unscaled-long sum.
+    "window_analytics": 15,
+    "rolling_window_revenue": 15,
     # r14: pagerank loop (lazy seed checkpoints + one-pass edge build),
     # the incremental gate's folded day-0 copy, and the O(len²)
     # tokenization fixes.

@@ -81,27 +81,3 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def ship_package(spark: SparkSession) -> None:
-    """Make ``datapipeline_gcp_spark`` importable on executors by
-    shipping a zip of the package via ``addPyFile``.
-
-    Needed when the driver imported the engine by file path (so the
-    package is not on the executors' PYTHONPATH) AND a UDF references
-    module-level engine code. The built-in operators avoid the need:
-    they are pure column expressions or self-contained closures.
-    """
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.mkdtemp(prefix="dgs_pkg_"), "datapipeline_gcp_spark.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(out)

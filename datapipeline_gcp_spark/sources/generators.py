@@ -214,18 +214,6 @@ ORACLES = {
 }
 
 
-def gen_stations(spark: SparkSession, n: int = 100) -> DataFrame:
-    """The Cloud SQL pass-through table (S3 test fixture)."""
-    return spark.range(n).select(
-        F.col("id").alias("station_id"),
-        F.concat(F.lit("station_"), F.col("id")).alias("name"),
-        F.element_at(
-            F.array(*[F.lit(c) for c in COUNTRIES]),
-            (F.pmod(F.col("id"), F.lit(len(COUNTRIES))) + 1).cast("int"),
-        ).alias("country"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Landing-file writers (K3): one file per call, reference naming
 # ---------------------------------------------------------------------------

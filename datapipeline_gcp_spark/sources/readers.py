@@ -9,9 +9,10 @@
   ``cloud_function/create_campaigns/txt/main.py:30``). Here it is just a
   reader option; no cluster lifecycle exists.
 - S3 snapshot: the Cloud SQL ``SELECT *``-export-then-load path
-  (``datapipeline_gcp.py:36,85-93,372-388``) — a CSV snapshot reader,
-  plus a JDBC reader for live databases (needs a JDBC driver jar on the
-  classpath; gated, since none ships in this environment).
+  (``datapipeline_gcp.py:36,85-93,372-388``) — the exported snapshot
+  is plain CSV read by :func:`read_csv`; a JDBC reader covers live
+  databases (needs a JDBC driver jar on the classpath; gated, since none
+  ships in this environment).
 - S5 batch sensor: glob-nonempty existence check with timeout
   (``datapipeline_gcp.py:204-218``).
 
@@ -115,15 +116,6 @@ def read_tsv(
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
         .csv(path_glob)
     )
-
-
-def read_snapshot_csv(
-    spark: SparkSession, path_glob: str, schema: T.StructType
-) -> DataFrame:
-    """S3 (snapshot form) — a database table exported to CSV, loaded like
-    S1 but headerless by default (the reference's Cloud SQL export writes
-    no header, ``datapipeline_gcp.py:85-93``)."""
-    return read_csv(spark, path_glob, schema, header=False)
 
 
 def read_jdbc(

@@ -1,8 +1,9 @@
-"""r14 fast money aggregation: the unscaled-long path must be bit-equal
-to the literal DECIMAL(18,4) accumulator on the money domain, and must
-reproduce the decimal cast's NULL semantics on the specials (NULL, NaN,
-±inf, overflow). See determinism.py for the domain and proof sketch;
-tools/check_money_parity.py for the exhaustive data sweep."""
+"""Money aggregation: the unscaled-long sum must be bit-equal to the
+DECIMAL(18,4) reference on the money domain, reproduce the decimal
+cast's NULL semantics on the specials (NULL, NaN, ±inf), and fail loudly
+outside the domain (decimal overflow, long overflow). See determinism.py
+for the domain and proof sketch; tools/check_money_parity.py for the
+exhaustive data sweep."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
+from pyspark.errors import ArithmeticException, SparkRuntimeException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -19,7 +21,9 @@ from datapipeline_gcp_spark.determinism import (
     dsum_diff,
     money_total,
     money_unscaled,
+    sql_dsum_fast,
 )
+from datapipeline_gcp_spark.operators.business import _wsum
 
 # money-domain values: <=4 decimal digits, mixed signs/magnitudes,
 # including the awkward binary cases (x*1e4 not exactly integral).
@@ -48,10 +52,8 @@ MONEY = [
 ]
 
 #: specials where the decimal cast itself is defined (NULL) under the
-#: engine's ANSI session. True overflow (e.g. 1e15) RAISES on the exact
-#: path under ANSI while the guarded fast path yields NULL — an
-#: out-of-domain divergence documented in determinism.py and covered by
-#: test_overflow_is_null_on_fast_path below.
+#: engine's ANSI session. True overflow (e.g. 1e15) raises on both the
+#: decimal cast and the unscaled-long sum — see the tests below.
 SPECIALS = [None, float("nan"), float("inf"), float("-inf")]
 
 
@@ -60,8 +62,7 @@ def _halfup_unscaled(x: float) -> int | None:
     if x is None or math.isnan(x) or math.isinf(x):
         return None
     d = Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-    u = int(d * 10**4)
-    return u if abs(u) < 10**18 else None
+    return int(d * 10**4)
 
 
 def test_money_unscaled_matches_decimal_cast(spark):
@@ -103,17 +104,65 @@ def test_dsum_bitwise_equals_exact_path(spark):
             )
 
 
-def test_overflow_is_null_on_fast_path(spark):
-    """Out-of-domain doubles (beyond DECIMAL(18,4)): the guarded fast
-    path yields NULL — matching the non-ANSI decimal cast the dsum
-    docstring was written against (under ANSI the exact path raises
-    instead; the divergence and the SPARK_GRAFT_EXACT_DECIMAL_SUMS
-    escape are documented in determinism.py)."""
-    df = spark.createDataFrame([Row(x=1e15), Row(x=-1e15)], "x double")
-    got = df.select(money_unscaled("x").alias("u")).collect()
-    assert [r.u for r in got] == [None, None]
-    for r, ref in zip(got, (_halfup_unscaled(1e15), _halfup_unscaled(-1e15))):
-        assert r.u == ref
+def _one_row(spark, x: float):
+    return spark.createDataFrame([Row(g=0, x=x)], "g int, x double")
+
+
+def test_overflow_raises_naming_money_domain(spark):
+    """A finite value beyond DECIMAL(18,4) (|x·10^4| >= 1e18) fails the
+    query with a message naming the money domain and the value — where
+    the ANSI decimal cast raises too, never a silent NULL."""
+    for x, shown in ((1e15, "1.0E15"), (-1e15, "-1.0E15")):
+        df = _one_row(spark, x)
+        with pytest.raises(SparkRuntimeException, match="money domain") as ei:
+            df.select(money_unscaled("x")).collect()
+        assert f"violated: {shown} is outside" in str(ei.value)
+        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            df.select(dec("x")).collect()
+
+
+@pytest.mark.parametrize("x", [1e15, -1e15], ids=["pos", "neg"])
+def test_overflow_raises_through_dsum_and_sql(spark, x):
+    df = _one_row(spark, x)
+    with pytest.raises(SparkRuntimeException, match="money domain"):
+        df.groupBy("g").agg(dsum("x")).collect()
+    df.createOrReplaceTempView("money_overflow")
+    q = f"SELECT g, {sql_dsum_fast('x')} AS s FROM money_overflow GROUP BY g"
+    with pytest.raises(SparkRuntimeException, match="money domain"):
+        spark.sql(q).collect()
+
+
+def test_sql_dsum_fast_matches_dsum(spark):
+    rows = [Row(g=i % 3, x=v) for i, v in enumerate(MONEY + SPECIALS)]
+    spark.createDataFrame(rows, "g int, x double").createOrReplaceTempView(
+        "money_sql"
+    )
+    got = spark.sql(
+        f"SELECT g, {sql_dsum_fast('x')} AS s FROM money_sql GROUP BY g"
+    ).collect()
+    ref = spark.table("money_sql").groupBy("g").agg(dsum("x").alias("s"))
+    assert {r.g: repr(r.s) for r in got} == {
+        r.g: repr(r.s) for r in ref.collect()
+    }
+
+
+def test_group_sum_past_long_range_raises(spark):
+    """Every row is in-domain (9e13 -> 9e17 unscaled) but eleven of them
+    sum past 2^63 unscaled: SUM(BIGINT) raises under ANSI, not wraps."""
+    df = spark.createDataFrame([Row(g=0, x=9e13)] * 11, "g int, x double")
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        df.groupBy("g").agg(dsum("x")).collect()
+
+
+def test_weighted_sum_product_overflow_raises(spark):
+    """business._wsum's per-row money_unscaled(c) * _n is a long
+    multiply: an in-domain value times a large multiplicity overflows
+    loudly (1e17 unscaled x 100)."""
+    df = spark.createDataFrame(
+        [Row(g=0, income=1e13, _n=100)], "g int, income double, _n bigint"
+    )
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        df.groupBy("g").agg(_wsum("income")).collect()
 
 
 def test_all_null_and_all_special_groups_sum_to_null(spark):

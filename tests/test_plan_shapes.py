@@ -97,6 +97,68 @@ def test_kpi_aggregates_read_pruned_master_columns(spark, name):
         assert n_cols <= 6, f"{name} scan reads {n_cols} columns: {schema}"
 
 
+def _seq(jseq) -> list:
+    """A Scala Seq from the JVM as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _decimal_sums(plan) -> list[str]:
+    """Every ``sum`` aggregate (grouped or windowed) whose input is a
+    DecimalType, found by walking the analyzed plan's nodes, their
+    expressions and their subquery plans (``innerChildren``)."""
+    hits: list[str] = []
+
+    def walk_expr(e) -> None:
+        if e.getClass().getSimpleName() == "Sum":
+            if e.child().dataType().typeName().startswith("decimal"):
+                hits.append(e.toString())
+        for c in _seq(e.children()):
+            walk_expr(c)
+
+    def walk_plan(node) -> None:
+        for e in _seq(node.expressions()):
+            walk_expr(e)
+        for c in _seq(node.children()) + _seq(node.innerChildren()):
+            walk_plan(c)
+
+    walk_plan(plan)
+    return hits
+
+
+#: every query whose money SUM/AVG runs on the engine's unscaled-long
+#: sum (the tpch family keeps its shared decimal SQL on purpose).
+_MONEY_SUM_QUERIES = [
+    "b_sales_kpi",
+    "b_performance_metrics",
+    "b_customer_retention",
+    "b_profitability_kpi",
+    "b_product_performance",
+    "cte_revenue_report",
+    "join_composite_key",
+    "window_analytics",
+    "rolling_window_revenue",
+]
+
+
+def _analyzed(spark, name: str):
+    return _QUERIES[name](spark, SF_CORRECTNESS)._jdf.queryExecution().analyzed()
+
+
+@pytest.mark.parametrize("name", _MONEY_SUM_QUERIES)
+def test_money_sums_never_accumulate_decimals(spark, name):
+    """One money-sum form: no aggregate or window ``sum`` over a
+    DECIMAL input may come back into these plans (the unscaled-long
+    accumulator only meets decimals in its per-group finisher)."""
+    hits = _decimal_sums(_analyzed(spark, name))
+    assert not hits, f"{name} sums decimals: {hits}"
+
+
+def test_decimal_sum_detector_sees_tpch(spark):
+    """The detector above is live: tpch_q1's shared decimal SQL is
+    reported."""
+    assert _decimal_sums(_analyzed(spark, "tpch_q1"))
+
+
 def test_bm25_broadcasts_query_terms_and_stats(spark):
     """BM25's postings prune (query-term set), df table, and corpus
     stats must all broadcast — the only shuffles are the tf/df

@@ -1,25 +1,29 @@
-"""Rounding-parity proof sweep for the r14 unscaled-long money sums.
+"""Rounding-parity proof sweep for the engine's unscaled-long money sums.
 
-The fast aggregation path (determinism.money_unscaled) replaces
+The engine's money sum (determinism.money_unscaled) computes
+
+    FLOOR(x * 1e4 + 0.5)              -- pure double/long codegen
+
+per row where the decimal reference the oracles spell computes
 
     CAST(x AS DECIMAL(18,4))          -- Double.toString -> BigDecimal
                                       --   .setScale(4, HALF_UP)
-with
-    FLOOR(x * 1e4 + 0.5)              -- pure double/long codegen
 
-per row. The two agree whenever x is a "money-domain" double: the
-nearest double to a value whose decimal expansion terminates within 4
-fractional digits, with |x| <= ~1e11 (see determinism.py for the error
-bound). This sweep *proves the data parity* exhaustively: for every
-(table, expression) that any dsum/davg/dsum_diff call site or business
-weighted sum feeds, it counts rows where
+The two agree whenever x is a "money-domain" double: the nearest double
+to a value whose decimal expansion terminates within 4 fractional
+digits, with |x| <= ~1e11 (see determinism.py for the error bound).
+This sweep *proves the data parity* exhaustively: for every (table,
+expression) that any dsum/davg/dsum_diff call site, business weighted
+sum or window money sum feeds, it counts rows where
 
-    CAST(CAST(x AS DECIMAL(18,4)) * 10000 AS BIGINT)   -- exact unscaled
+    CAST(CAST(x AS DECIMAL(18,4)) * 10000 AS BIGINT)   -- decimal cast
 is not null-safe-equal to
-    money_unscaled(x)                                   -- fast unscaled
+    money_unscaled(x)                                   -- engine form
 
 in BOTH Spark and DuckDB, over every SF dir given (plus the degenerate
 fixture variants when present). Exit 0 iff zero mismatches everywhere.
+A value outside DECIMAL(18,4) makes both Spark forms raise, which stops
+the sweep loudly rather than counting it.
 
 Usage: python tools/check_money_parity.py [sf_dir ...]
        (default: /root/testdata/sf0.001 sf0.01 sf0.1 + /tmp/degenerate/*)
@@ -37,8 +41,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datapipeline_gcp_spark.determinism import dec, money_unscaled  # noqa: E402
 
-#: every (table, SQL expression) a fast money sum consumes anywhere in
-#: the engine (dsum/davg/dsum_diff call sites + business weighted sums).
+#: every (table, SQL expression) a money sum consumes anywhere in the
+#: engine (dsum/davg/dsum_diff call sites, business weighted sums, the
+#: window running/rolling sums).
 EXPRS = [
     ("orders", "o_totalprice"),
     ("orders", "o_totalprice * 0.1"),          # relational.commission
@@ -69,11 +74,11 @@ def main(dirs):
             if not os.path.exists(p):
                 continue
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
-            # --- Spark: exact unscaled vs fast unscaled, null-safe ---
+            # --- Spark: decimal-cast unscaled vs engine form, null-safe ---
             df = spark.read.parquet(p)
             x = F.expr(expr)
-            exact_u = (dec(x) * F.lit(10000)).cast("long")
-            n_spark = df.where(~exact_u.eqNullSafe(money_unscaled(x))).count()
+            dec_u = (dec(x) * F.lit(10000)).cast("long")
+            n_spark = df.where(~dec_u.eqNullSafe(money_unscaled(x))).count()
             n_rows = df.count()
             # --- DuckDB: same comparison (oracle-side cast semantics).
             # NaN is nulled FIRST, exactly like the oracles' nansafe
