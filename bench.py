@@ -214,8 +214,8 @@ def main() -> None:
         # any future consumer must treat null as FAILED ROUND, not zero
         "headline_sum_null_means": "a headline query lost every sample - failed round",
         # host state around the headline block: [1m, 5m, 15m] runqueue
-        # averages on a 32-cpu host — readings far above n_cpus mean
-        # another workload shared the machine during the timed window
+        # averages — readings far above n_cpus_host mean another
+        # workload shared the machine during the timed window
         "loadavg_before_headline": load_before,
         "loadavg_after_headline": load_after_headline,
         "n_cpus_host": os.cpu_count(),

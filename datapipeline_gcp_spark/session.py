@@ -15,12 +15,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partition count: ~number of local cores while testing; on a real
-# cluster this should be ~2-3x total executor cores (or left to AQE's
-# coalescing with a high initial value). AQE coalescing makes the exact
-# number much less critical than in static planning.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_session(
     app_name: str = "datapipeline_gcp_spark",
@@ -33,15 +27,16 @@ def get_session(
     Parameters
     ----------
     master:
-        Cluster master; defaults to ``local[$SPARK_GRAFT_CPUS]``. On a
-        real cluster pass e.g. ``yarn`` / ``k8s://...`` — nothing else in
-        the engine assumes local mode.
+        Cluster master; defaults to ``local[$SPARK_GRAFT_CPUS]``, and to
+        one thread per CPU this process may run on when the variable is
+        unset. On a real cluster pass e.g. ``yarn`` / ``k8s://...`` —
+        nothing else in the engine assumes local mode.
     warehouse_dir:
         Spark SQL warehouse location for the layer databases
         (``raw_layer`` / ``master_layer`` / ``business_layer``). The
         catalog plays the role BigQuery datasets play in the reference.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -59,7 +54,8 @@ def get_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle sizing: ~cores locally; AQE coalesces down.
+        # --- shuffle sizing: ~cores locally; on a real cluster ~2-3x
+        # total executor cores, or a high initial value AQE coalesces down.
         .config("spark.sql.shuffle.partitions", cpus)
         # --- Arrow for every pandas_udf / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -60,8 +60,8 @@ from datapipeline_gcp_spark.streaming.dedup import (
     streaming_ingest_dedup,
 )
 from datapipeline_gcp_spark.streaming.harness import (
-    GATE_SHUFFLE_PARTITIONS,
     SQL_EVENT_TIME_VALID,
+    gate_scope,
     run_to_memory_sink,
     split_event_time,
     valid_event_time,
@@ -148,17 +148,28 @@ def _drain_quarantine(
     run_to_memory_sink(spark, split_event_time(src)[1], sink_name, ckpt)
 
 
+def _assert_archived(
+    landing: str, archive: str, ext: str, want: int, run: str = ""
+) -> None:
+    """Archival completeness after a drain: ``landing/<ext>`` is empty
+    and *archive* holds exactly *want* ``.<ext>`` files."""
+    n_landing = len(os.listdir(f"{landing}/{ext}"))
+    n_archived = len([f for f in os.listdir(archive) if f.endswith(f".{ext}")])
+    if n_landing or n_archived != want:
+        raise AssertionError(
+            f"{run + ': ' if run else ''}archival incomplete: {n_landing} "
+            f"still landing, {n_archived} archived (want {want})"
+        )
+
+
 def events_stream_e2e_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_utc(spark)
     ev = _load_events(spark, sf_dir)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(dir=base, prefix="gate_e2e_")
-    landing = f"{root}/landing"
-    archive = f"{root}/archive"
-    ckpt = f"{root}/ckpt"
     _drop_gate_table(spark, GATE_TABLE)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with gate_scope(spark, "gate_e2e_") as root:
+        landing = f"{root}/landing"
+        archive = f"{root}/archive"
+        ckpt = f"{root}/ckpt"
         parts = {
             i: ev.filter(F.pmod(F.col("event_id"), N_PARTS) == i)
             for i in range(N_PARTS)
@@ -168,7 +179,6 @@ def events_stream_e2e_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         for i in REDELIVERED_PARTS:  # same rows, new object name
             write_landing_file(parts[i], landing, "events", "csv", "20240101")
 
-        spark.conf.set("spark.sql.shuffle.partitions", GATE_SHUFFLE_PARTITIONS)
         _drain_quarantine(
             spark, landing, root, f"{GATE_TABLE}_quarantine"
         )
@@ -184,18 +194,9 @@ def events_stream_e2e_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
             transform=_ingest_dedup_valid,
         )
         drain(stream)
-        n_landing = len(os.listdir(f"{landing}/csv"))
-        n_archived = len(
-            [f for f in os.listdir(archive) if f.endswith(".csv")]
+        _assert_archived(
+            landing, archive, "csv", N_PARTS + len(REDELIVERED_PARTS)
         )
-        if n_landing or n_archived != N_PARTS + len(REDELIVERED_PARTS):
-            raise AssertionError(
-                f"archival incomplete: {n_landing} still landing, "
-                f"{n_archived} archived"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
     return spark.table(GATE_TABLE).select("event_id", "user_id", "event_type")
 
 
@@ -224,19 +225,15 @@ def events_stream_crossrun_redelivery_gate(
     run 2's files in landing, which this gate asserts against."""
     pin_utc(spark)
     ev = _load_events(spark, sf_dir)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(dir=base, prefix="gate_crossrun_")
-    landing = f"{root}/landing"
-    archive = f"{root}/archive"
-    ckpt = f"{root}/ckpt"
     _drop_gate_table(spark, CROSSRUN_TABLE)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with gate_scope(spark, "gate_crossrun_") as root:
+        landing = f"{root}/landing"
+        archive = f"{root}/archive"
+        ckpt = f"{root}/ckpt"
         parts = {
             i: ev.filter(F.pmod(F.col("event_id"), N_PARTS) == i)
             for i in range(N_PARTS)
         }
-        spark.conf.set("spark.sql.shuffle.partitions", GATE_SHUFFLE_PARTITIONS)
 
         def start_run() -> None:
             # quarantine leg first (landing still holds only this run's
@@ -258,30 +255,18 @@ def events_stream_crossrun_redelivery_gate(
             )
             drain(stream)
 
-        def check_archival(run: str, want_archived: int) -> None:
-            n_landing = len(os.listdir(f"{landing}/csv"))
-            n_archived = len(
-                [f for f in os.listdir(archive) if f.endswith(".csv")]
-            )
-            if n_landing or n_archived != want_archived:
-                raise AssertionError(
-                    f"{run}: archival incomplete: {n_landing} still "
-                    f"landing, {n_archived} archived (want {want_archived})"
-                )
-
         for i in range(N_PARTS):
             write_landing_file(parts[i], landing, "events", "csv", "20240101")
         start_run()
-        check_archival("run 1", N_PARTS)
+        _assert_archived(landing, archive, "csv", N_PARTS, "run 1")
         # the bus redelivers two whole objects AFTER the pipeline run
         # finished — new object names, same rows
         for i in REDELIVERED_PARTS:
             write_landing_file(parts[i], landing, "events", "csv", "20240101")
         start_run()  # same checkpoint: restored state + watermark
-        check_archival("run 2", N_PARTS + len(REDELIVERED_PARTS))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
+        _assert_archived(
+            landing, archive, "csv", N_PARTS + len(REDELIVERED_PARTS), "run 2"
+        )
     return spark.table(CROSSRUN_TABLE).select(
         "event_id", "user_id", "event_type"
     )
@@ -330,14 +315,11 @@ def events_stream_idempotent_replay_gate(
     """
     pin_utc(spark)
     ev = _load_events(spark, sf_dir)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(dir=base, prefix="gate_idem_")
-    landing = f"{root}/landing"
-    archive = f"{root}/archive"
-    ckpt = f"{root}/ckpt"
     _drop_gate_table(spark, IDEM_TABLE)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with gate_scope(spark, "gate_idem_") as root:
+        landing = f"{root}/landing"
+        archive = f"{root}/archive"
+        ckpt = f"{root}/ckpt"
         for i in range(N_IDEM_PARTS):
             write_landing_file(
                 ev.filter(
@@ -349,7 +331,6 @@ def events_stream_idempotent_replay_gate(
                 landing, "events", "csv", "20240101",
             )
         basenames = sorted(os.listdir(f"{landing}/csv"))
-        spark.conf.set("spark.sql.shuffle.partitions", GATE_SHUFFLE_PARTITIONS)
 
         def start_run():
             return stream_landing_table(
@@ -379,9 +360,6 @@ def events_stream_idempotent_replay_gate(
                 f"archival not exactly-once: {len(still)} still landing, "
                 f"archived {archived} vs landed {basenames}"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
     return spark.table(IDEM_TABLE).select("event_id", "user_id", "event_type")
 
 
@@ -456,14 +434,11 @@ def multimodal_stream_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     stateful-op in the analyzed plan)."""
     pin_utc(spark)
     assets = phash_stream_assets(spark, sf_dir)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(dir=base, prefix="gate_mm_")
-    landing = f"{root}/landing"
-    archive = f"{root}/archive"
-    ckpt = f"{root}/ckpt"
     _drop_gate_table(spark, ASSET_GATE_TABLE)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with gate_scope(spark, "gate_mm_") as root:
+        landing = f"{root}/landing"
+        archive = f"{root}/archive"
+        ckpt = f"{root}/ckpt"
         parts = {
             i: assets.filter(F.pmod(F.col("asset_id"), N_PARTS) == i)
             for i in range(N_PARTS)
@@ -473,7 +448,6 @@ def multimodal_stream_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         for i in REDELIVERED_PARTS:  # same shards, new object names
             write_landing_file(parts[i], landing, "assets", "parquet", "20240101")
 
-        spark.conf.set("spark.sql.shuffle.partitions", GATE_SHUFFLE_PARTITIONS)
         stream = stream_landing_table(
             spark,
             landing,
@@ -486,18 +460,9 @@ def multimodal_stream_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
             transform=multimodal_phash_transform,
         )
         drain(stream)
-        n_landing = len(os.listdir(f"{landing}/parquet"))
-        n_archived = len(
-            [f for f in os.listdir(archive) if f.endswith(".parquet")]
+        _assert_archived(
+            landing, archive, "parquet", N_PARTS + len(REDELIVERED_PARTS)
         )
-        if n_landing or n_archived != N_PARTS + len(REDELIVERED_PARTS):
-            raise AssertionError(
-                f"archival incomplete: {n_landing} still landing, "
-                f"{n_archived} archived"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
     return spark.table(ASSET_GATE_TABLE).select("ahash")
 
 
@@ -567,8 +532,9 @@ def _pairs_probe(index: DataFrame, banded: DataFrame) -> DataFrame:
 
 INCR_INDEX_BASE = "gate_incr_lsh_index_base"
 INCR_COMP_BASE = "gate_incr_components_base"
-#: gate-scale bucket count, matched to GATE_SHUFFLE_PARTITIONS (a real
-#: deployment sizes buckets to corpus volume — sinks.write_bucketed)
+#: gate-scale bucket count, matched to gate_scope's shuffle partition
+#: count (a real deployment sizes buckets to corpus volume —
+#: sinks.write_bucketed)
 INCR_N_BUCKETS = 8
 #: (applicationId, sf_dir) whose day-0 base tables are already on disk,
 #: mapped to the base index's banded-row count (``idx0`` — counted once
@@ -646,11 +612,6 @@ def dedup_stream_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     batch2 = batch_all.filter(F.col("doc_id") >= 3_000_000).select("doc_id", "text")
     _drop_gate_table(spark, INCR_INDEX_TABLE)
     _drop_gate_table(spark, INCR_COMP_TABLE)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(dir=base, prefix="gate_incrdedup_")
-    landing = f"{root}/landing"
-    ckpt = f"{root}/ckpt"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     seen_rows: list[int] = []
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -698,21 +659,23 @@ def dedup_stream_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         seen_rows.append(n_batch)
 
-    def run_once() -> None:
-        q = (
-            spark.readStream.schema(_DOCS_LANDING_SCHEMA)
-            .option("maxFilesPerTrigger", 100)
-            .option("pathGlobFilter", "docs_*.parquet")
-            .parquet(f"{landing}/parquet")
-            .writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with gate_scope(spark, "gate_incrdedup_") as root:
+        landing = f"{root}/landing"
+        ckpt = f"{root}/ckpt"
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", GATE_SHUFFLE_PARTITIONS)
+        def run_once() -> None:
+            q = (
+                spark.readStream.schema(_DOCS_LANDING_SCHEMA)
+                .option("maxFilesPerTrigger", 100)
+                .option("pathGlobFilter", "docs_*.parquet")
+                .parquet(f"{landing}/parquet")
+                .writeStream.foreachBatch(process)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
         # day 0 (once per session+sf): index the corpus, cluster it —
         # then copy the pristine base into this invocation's working
         # tables (the streaming runs mutate those; the base stays clean)
@@ -780,9 +743,6 @@ def dedup_stream_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame
                 f"index drifted: {idx_n} banded rows, want {expect} "
                 "(double-append or dropped append)"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
     # an all-empty corpus legitimately records no batch, so the working
     # map may never materialize — the day-0 base IS the answer then
     final_comp = (

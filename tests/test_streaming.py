@@ -11,7 +11,7 @@ from pyspark.sql import types as T
 
 from datapipeline_gcp_spark import schemas
 from datapipeline_gcp_spark.sources import generators as gen
-from datapipeline_gcp_spark.streaming import ingest, windows
+from datapipeline_gcp_spark.streaming import harness, ingest, windows
 
 from tests.conftest import SF_CORRECTNESS, assert_frames_match
 
@@ -237,30 +237,6 @@ def test_parse_landing_filename(spark):
     assert (row.t, row.e) == ("campaigns", "csv")
 
 
-def _events_stream(spark):
-    """events.parquet as a stream. readStream needs an explicit schema,
-    so probe the raw file's schema with the batch reader and apply the
-    same encoding shim as schemas.load_testdata (old nanos-as-long
-    testdata needs a µs conversion; current µs testdata reads directly
-    as a timestamp column)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{SF_CORRECTNESS}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(SF_CORRECTNESS)
-    )
-    if dict(raw.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    # Watermarks require TIMESTAMP (not NTZ). The session is pinned to
-    # UTC (conftest/load_testdata), so the cast is identity on the
-    # stored microseconds and the batch comparison sees equal values.
-    schemas.pin_utc(spark)
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
 @pytest.mark.parametrize(
     "stream_fn,batch_fn",
     [
@@ -271,7 +247,8 @@ def _events_stream(spark):
 )
 def test_streaming_equals_batch(spark, tmp_path, stream_fn, batch_fn, request):
     name = f"stream_out_{request.node.callspec.id}"
-    agg = stream_fn(_events_stream(spark))
+    schemas.pin_utc(spark)
+    agg = stream_fn(harness.events_stream(spark, SF_CORRECTNESS))
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -289,7 +266,8 @@ def test_streaming_equals_batch(spark, tmp_path, stream_fn, batch_fn, request):
 def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     from datapipeline_gcp_spark.streaming import joins
 
-    src = _events_stream(spark)
+    schemas.pin_utc(spark)
+    src = harness.events_stream(spark, SF_CORRECTNESS)
     joined = joins.streaming_interval_join(
         src.filter(F.col("event_type") == "purchase"),
         src.filter(F.col("event_type") == "click"),
@@ -312,7 +290,10 @@ def test_stream_static_enrichment_equals_batch(spark, tmp_path):
     from datapipeline_gcp_spark.streaming import joins
 
     dim = schemas.load_testdata(spark, SF_CORRECTNESS, ("customer",))["customer"]
-    enriched = joins.enrich_with_dim(_events_stream(spark), dim)
+    schemas.pin_utc(spark)
+    enriched = joins.enrich_with_dim(
+        harness.events_stream(spark, SF_CORRECTNESS), dim
+    )
     q = (
         enriched.writeStream.outputMode("append")
         .format("memory")
