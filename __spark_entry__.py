@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datapipeline_gcp_spark import registry  # noqa: E402
-from datapipeline_gcp_spark.operators.business import b_performance_metrics  # noqa: E402
+from datapipeline_gcp_spark.operators.business import BUILDERS  # noqa: E402
 from datapipeline_gcp_spark.operators.master import master_from_testdata  # noqa: E402
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
@@ -30,7 +30,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the reference's spine — 3-way master join
     (m_data_model, J1+J2) feeding the b_performance_metrics KPI
     aggregate (A2: mixed COUNT DISTINCT + SUM/AVG + post-agg ratio)."""
-    return b_performance_metrics(master_from_testdata(spark, _SMOKE_SF_DIR))
+    return BUILDERS["b_performance_metrics"](
+        master_from_testdata(spark, _SMOKE_SF_DIR)
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -134,15 +134,6 @@ def dsum(c: Column | str) -> Column:
     return money_total(F.sum(money_unscaled(c)))
 
 
-def davg(c: Column | str) -> Column:
-    """Order-independent AVG: :func:`dsum` divided by the non-null count.
-
-    Matches SQL ``CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(x)``
-    — a single double division on deterministic operands.
-    """
-    return dsum(c) / F.count(_col(c))
-
-
 # --- SQL-side mirrors (for oracle strings and spark.sql text) -------------
 
 
@@ -202,12 +193,3 @@ def sql_dsum_diff(left: str, right: str) -> str:
         f"CAST(SUM(CAST({left} AS {_DECIMAL}) - CAST({right} AS {_DECIMAL}))"
         " AS DOUBLE)"
     )
-
-
-def dsum_diff(left: Column | str, right: Column | str) -> Column:
-    """Order-independent SUM(left - right) for double measures.
-
-    The per-row difference of unscaled longs equals the unscaled
-    difference of the DECIMAL(19,4) subtraction (exact), and is NULL iff
-    either side is NULL — identical term-skipping."""
-    return money_total(F.sum(money_unscaled(left) - money_unscaled(right)))

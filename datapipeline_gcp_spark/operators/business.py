@@ -1,8 +1,8 @@
-"""Business-layer KPI aggregates A1-A5 (SURVEY.md §2.5).
+"""Business-layer KPI aggregates A1-A5 (SURVEY.md §2.5): one function
+per KPI over a weighted grain.
 
-Each builder takes the master DataFrame (``master.MASTER_COLUMNS``) and
-reproduces one reference business table exactly — same group keys, same
-aggregate set, same output aliases:
+Each ``b_<name>(g)`` reproduces one reference business table exactly —
+same group keys, same aggregate set, same output aliases:
 
 - ``b_sales_kpi``           — ``b_sales_kpi.sql:2-14``
 - ``b_performance_metrics`` — ``b_performance_metrics.sql:1-16`` (also
@@ -12,12 +12,27 @@ aggregate set, same output aliases:
 - ``b_product_performance`` — ``b_product_performance.sql:2-18`` (inline
   ``datapipeline_gcp.py:137-154``; canonical ``b_`` name per SURVEY §1.5.3)
 
-All are single hash aggregations: Spark plans partial (map-side) +
-final HashAggregate, so the shuffle carries pre-combined groups — the
-right shape at 100 TB. The mixed COUNT(DISTINCT)+SUM aggregates use
-Catalyst's expand-based distinct rewrite automatically. Money SUM/AVG
-accumulate unscaled longs (see ``determinism``), so results are order-
-and partitioning-independent and out-of-domain money fails loudly.
+The grain ``g`` has the master's column names plus ``_n``, the number of
+master rows a grain row stands for, and ``_q``, their unscaled quantity
+sum (A4/A5 only). The pipeline's master is the ``_n = 1`` grain
+(:func:`master_grain`; Catalyst folds the ``* 1``). The registry and the
+``bench.py`` headline aggregate the TPC-H testdata at order grain:
+lineitem contributes only multiplicity (and quantity), so it is
+pre-counted per order key — ~4x fewer rows into every aggregate, and at
+100 TB one bigint per order crosses the shuffle instead of the fan-out.
+
+EXACTNESS, for arbitrary data: money sums are integer arithmetic on
+unscaled longs (``determinism``), so SUM(u(x)) over n copies is
+SUM(u(x) * n) bit for bit; COUNT(x) is the SUM of n over rows with x
+non-null (x is order-level, so all n copies are NULL together); COUNT
+(DISTINCT k) ignores multiplicity; duplicate order keys fan out, and
+NULL join keys and orders without lineitems drop, identically on both
+grains (inner equi-joins). The per-row product u(c) * _n stays a long
+(|u| <= 1e10 for money <= 1e6, times <= 7 lineitems per order, << 2^63);
+past that the product and the SUM raise ARITHMETIC_OVERFLOW under ANSI.
+
+Build each repeated measure Column once per KPI and reuse it: the plan
+is the same, and the driver builds half the expression trees.
 """
 
 from __future__ import annotations
@@ -26,9 +41,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark.determinism import (
-    davg,
-    dsum,
-    dsum_diff,
     money_total,
     money_unscaled,
     sql_davg,
@@ -38,6 +50,31 @@ from datapipeline_gcp_spark.determinism import (
 from datapipeline_gcp_spark.operators.master import MASTER_ORACLE
 from datapipeline_gcp_spark.schemas import load_testdata
 
+
+def _wsum(c: str) -> Column:
+    """SUM(c) over the grain: SUM(u(c) * _n) rescaled to DOUBLE."""
+    return money_total(F.sum(money_unscaled(c) * F.col("_n")))
+
+
+def _wcount(c: str) -> Column:
+    """COUNT(c) over the grain: total multiplicity of non-null c."""
+    return F.sum(F.when(F.col(c).isNotNull(), F.col("_n")).otherwise(0))
+
+
+def _wsum_diff(left: str, right: str) -> Column:
+    """SUM(left - right) over the grain; a row's difference is NULL iff
+    either side is, like the oracle's decimal subtraction."""
+    return money_total(
+        F.sum((money_unscaled(left) - money_unscaled(right)) * F.col("_n"))
+    )
+
+
+def _total_quantity() -> Column:
+    """SUM(quantity) over the grain: the ``_q`` pre-sums rescaled to
+    DOUBLE once per output group."""
+    return money_total(F.sum(F.col("_q")))
+
+
 def _country_date() -> list:
     # Built lazily — Column construction needs an active SparkContext.
     return [
@@ -46,135 +83,135 @@ def _country_date() -> list:
     ]
 
 
-def b_sales_kpi(master: DataFrame) -> DataFrame:
+# --- One function per KPI ----------------------------------------------------
+
+
+def b_sales_kpi(g: DataFrame) -> DataFrame:
     """A1 — sales KPI by country and date (``b_sales_kpi.sql:2-14``)."""
-    return master.groupBy(*_country_date()).agg(
+    income = _wsum("income")
+    return g.groupBy(*_country_date()).agg(
         F.countDistinct("transaction_id").alias("transaction_count"),
-        dsum("income").alias("total_income"),
-        davg("income").alias("average_income"),
-        dsum_diff("income", "campaign_cost").alias("total_profit"),
+        income.alias("total_income"),
+        (income / _wcount("income")).alias("average_income"),
+        _wsum_diff("income", "campaign_cost").alias("total_profit"),
     )
 
 
-def b_performance_metrics(master: DataFrame) -> DataFrame:
+def b_performance_metrics(g: DataFrame) -> DataFrame:
     """A2 — A1's aggregates + campaign-cost measures + the post-agg
     ratio SUM(income)/COUNT(DISTINCT transaction_id)
     (``b_performance_metrics.sql:1-16``)."""
-    return master.groupBy(*_country_date()).agg(
-        F.countDistinct("transaction_id").alias("transaction_count"),
-        dsum("income").alias("total_income"),
-        dsum("campaign_cost").alias("total_campaign_cost"),
-        davg("income").alias("average_income"),
-        davg("campaign_cost").alias("average_campaign_cost"),
-        dsum_diff("income", "campaign_cost").alias("total_profit"),
-        (dsum("income") / F.countDistinct("transaction_id")).alias(
-            "average_transaction_value"
-        ),
+    txns = F.countDistinct("transaction_id")
+    income, cost = _wsum("income"), _wsum("campaign_cost")
+    return g.groupBy(*_country_date()).agg(
+        txns.alias("transaction_count"),
+        income.alias("total_income"),
+        cost.alias("total_campaign_cost"),
+        (income / _wcount("income")).alias("average_income"),
+        (cost / _wcount("campaign_cost")).alias("average_campaign_cost"),
+        _wsum_diff("income", "campaign_cost").alias("total_profit"),
+        (income / txns).alias("average_transaction_value"),
     )
 
 
-def b_customer_retention(master: DataFrame) -> DataFrame:
+def b_customer_retention(g: DataFrame) -> DataFrame:
     """A3 — conditional distinct counts (``b_customer_retention.sql:2-13``).
 
-    COUNT(DISTINCT CASE WHEN income > 0 THEN customer_id END): the
-    un-ELSE'd CASE yields NULL, which count-distinct ignores — Spark's
-    ``when`` without ``otherwise`` has identical NULL semantics.
+    COUNT(DISTINCT CASE WHEN p THEN customer_id END) counts distinct
+    non-NULL customers with at least one p-true row in the group. Three
+    of them would force Catalyst's Expand-x3 distinct rewrite; instead
+    collapse to one row per (group, customer) carrying ANY-row flags,
+    then count plainly. max(bool) skips NULL like the un-ELSE'd CASE
+    (all-NULL predicate -> NULL -> not counted); a NULL customer stays a
+    group key of the first phase, but count() skips it. Distinct counts
+    need no multiplicity, so this KPI reads no ``_n``.
     """
-    return master.groupBy(*_country_date()).agg(
-        F.countDistinct("customer_id").alias("unique_customers"),
-        F.countDistinct(
-            F.when(F.col("income") > 0, F.col("customer_id"))
-        ).alias("paying_customers"),
-        F.countDistinct(
-            F.when(F.col("income") == 0, F.col("customer_id"))
+    country, date = _country_date()
+    per_customer = g.groupBy(country, date, F.col("customer_id")).agg(
+        F.max(F.col("income") > 0).alias("_paying"),
+        F.max(F.col("income") == 0).alias("_non_paying"),
+    )
+    return per_customer.groupBy("country", "date").agg(
+        F.count("customer_id").alias("unique_customers"),
+        F.count(F.when(F.col("_paying"), F.col("customer_id"))).alias(
+            "paying_customers"
+        ),
+        F.count(
+            F.when(F.col("_non_paying"), F.col("customer_id"))
         ).alias("non_paying_customers"),
     )
 
 
-def b_profitability_kpi(master: DataFrame) -> DataFrame:
+def b_profitability_kpi(g: DataFrame) -> DataFrame:
     """A4 — profitability by product and country, no date key
     (``b_profitability_kpi.sql:2-14``)."""
-    return master.groupBy(
+    income = _wsum("income")
+    return g.groupBy(
         "product_id", F.col("transaction_country").alias("country")
     ).agg(
-        dsum("quantity").alias("total_quantity"),
-        dsum("income").alias("total_income"),
-        davg("income").alias("average_income"),
-        dsum_diff("income", "campaign_cost").alias("total_profit"),
+        _total_quantity().alias("total_quantity"),
+        income.alias("total_income"),
+        (income / _wcount("income")).alias("average_income"),
+        _wsum_diff("income", "campaign_cost").alias("total_profit"),
     )
 
 
-def b_product_performance(master: DataFrame) -> DataFrame:
+def b_product_performance(g: DataFrame) -> DataFrame:
     """A5 — product performance by product, country and date — the
     3-key grouping (``b_product_performance.sql:2-18``)."""
-    return master.groupBy(
+    txns = F.countDistinct("transaction_id")
+    income = _wsum("income")
+    return g.groupBy(
         "product_id",
         F.col("transaction_country").alias("country"),
         F.to_date("transaction_datetime").alias("date"),
     ).agg(
-        F.countDistinct("transaction_id").alias("transaction_count"),
-        dsum("quantity").alias("total_quantity"),
-        dsum("income").alias("total_income"),
-        davg("income").alias("average_income"),
-        dsum_diff("income", "campaign_cost").alias("total_profit"),
-        (dsum("income") / F.countDistinct("transaction_id")).alias(
-            "average_transaction_value"
-        ),
+        txns.alias("transaction_count"),
+        _total_quantity().alias("total_quantity"),
+        income.alias("total_income"),
+        (income / _wcount("income")).alias("average_income"),
+        _wsum_diff("income", "campaign_cost").alias("total_profit"),
+        (income / txns).alias("average_transaction_value"),
     )
 
 
+# --- Pipeline: the master is the _n = 1 grain --------------------------------
+
+
+def master_grain(master: DataFrame) -> DataFrame:
+    """The materialized master as a grain: every row stands for itself
+    (``_n = 1``) and ``_q`` is its unscaled quantity. KPIs that do not
+    read ``_q`` prune it away."""
+    return master.select(
+        "*", F.lit(1).alias("_n"), money_unscaled("quantity").alias("_q")
+    )
+
+
+def _builder(kpi):
+    def build(master: DataFrame) -> DataFrame:
+        return kpi(master_grain(master))
+
+    return build
+
+
+#: The pipeline's business step: table name -> ``(master) -> DataFrame``.
 BUILDERS = {
-    "b_sales_kpi": b_sales_kpi,
-    "b_performance_metrics": b_performance_metrics,
-    "b_customer_retention": b_customer_retention,
-    "b_profitability_kpi": b_profitability_kpi,
-    "b_product_performance": b_product_performance,
+    kpi.__name__: _builder(kpi)
+    for kpi in (
+        b_sales_kpi,
+        b_performance_metrics,
+        b_customer_retention,
+        b_profitability_kpi,
+        b_product_performance,
+    )
 }
 
-# ---------------------------------------------------------------------------
-# Driver-testdata wiring + DuckDB oracles
-# ---------------------------------------------------------------------------
-# The testdata master (master_from_testdata) has income = o_totalprice,
-# which is never 0 — the retention query's income=0 branch would be
-# vacuous. For that one query the fixture adaptation maps income to 0 for
-# a deterministic 1/7th of transactions (o_orderkey % 7 = 0) so both CASE
-# branches are exercised; the reference-shaped pipeline tests cover the
-# literal >0/=0 semantics on generated fixtures with real zero incomes.
-
-
-# ---------------------------------------------------------------------------
-# Order-grain fast path (VERDICT r11 #1 — the bench floor).
-#
-# b_sales_kpi / b_performance_metrics / b_customer_retention aggregate
-# ONLY order-level attributes (income, campaign_cost, country, customer,
-# date); the lineitem leg of the master join contributes nothing but row
-# MULTIPLICITY. So instead of fanning 600k master rows into the hash
-# aggregate (and a 3-key distinct rewrite over them), pre-count lineitems
-# per order key (map-side partial over one int column) and aggregate at
-# order grain with multiplicity-weighted measures — ~4x fewer rows into
-# every aggregate and no lineitem-grain money arithmetic. At 100 TB the
-# same rewrite turns the dominant shuffle (master fan-out rows) into a
-# count-shuffle of one bigint per order.
-#
-# EXACTNESS (holds for ARBITRARY data, proven against the unchanged
-# master oracle every round incl. the degenerate sweeps):
-# - money aggregation is integer arithmetic on unscaled values, so
-#   SUM(u(x)) over n identical copies == SUM(u(x) * n): bit-equal.
-# - COUNT(x) over master == SUM(n for rows with x non-null) (x is
-#   order-level, so all n copies are null together).
-# - COUNT(DISTINCT k) is unchanged: a key value exists at order grain
-#   iff it exists in the master (n >= 1 by the inner count-join).
-# - duplicate orderkeys (dupkeys variant) fan out identically on both
-#   paths; NULL join keys drop identically (inner equi-joins); orders
-#   with zero lineitems drop identically (inner join with the count).
-# ---------------------------------------------------------------------------
+# --- Registry: the TPC-H testdata at order grain -----------------------------
 
 
 def _order_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Master-equivalent order-grain relation: one row per
-    orders-row x customer match having >=1 lineitem, with ``_n`` = the
-    lineitem multiplicity of that row's order key. Same column names as
-    the master for the order-level attributes."""
+    """One row per orders-row x customer match having >=1 lineitem, with
+    ``_n`` = the lineitem multiplicity of that row's order key."""
     t = load_testdata(spark, sf_dir, ("customer", "orders", "lineitem"))
     li_n = t["lineitem"].groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("_n")
@@ -196,57 +233,6 @@ def _order_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("transaction_datetime"),
             F.col("_n"),
         )
-    )
-
-
-# The weighted sums use determinism's unscaled longs: the per-row
-# product u(c) * n stays a long multiply (|u| <= 1e10 for money <= 1e6,
-# times <= 7 lineitems per order in TPC-H, is ~1e11 << 2^63). Outside
-# that shape the product and the group SUM raise ARITHMETIC_OVERFLOW
-# under ANSI instead of wrapping; determinism.py documents both bounds.
-
-
-def _wsum(c: str) -> Column:
-    """Weighted twin of determinism.dsum: SUM(u(c) * _n) as double."""
-    return money_total(F.sum(money_unscaled(c) * F.col("_n")))
-
-
-def _wcount(c: str) -> Column:
-    """Weighted twin of COUNT(c): total multiplicity of non-null c."""
-    return F.sum(F.when(F.col(c).isNotNull(), F.col("_n")).otherwise(0))
-
-
-def _wsum_diff(left: str, right: str) -> Column:
-    """Weighted twin of determinism.dsum_diff."""
-    return money_total(
-        F.sum((money_unscaled(left) - money_unscaled(right)) * F.col("_n"))
-    )
-
-
-def _b_sales_kpi_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _order_grain(spark, sf_dir)
-    return g.groupBy(*_country_date()).agg(
-        F.countDistinct("transaction_id").alias("transaction_count"),
-        _wsum("income").alias("total_income"),
-        (_wsum("income") / _wcount("income")).alias("average_income"),
-        _wsum_diff("income", "campaign_cost").alias("total_profit"),
-    )
-
-
-def _b_performance_metrics_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _order_grain(spark, sf_dir)
-    return g.groupBy(*_country_date()).agg(
-        F.countDistinct("transaction_id").alias("transaction_count"),
-        _wsum("income").alias("total_income"),
-        _wsum("campaign_cost").alias("total_campaign_cost"),
-        (_wsum("income") / _wcount("income")).alias("average_income"),
-        (_wsum("campaign_cost") / _wcount("campaign_cost")).alias(
-            "average_campaign_cost"
-        ),
-        _wsum_diff("income", "campaign_cost").alias("total_profit"),
-        (_wsum("income") / F.countDistinct("transaction_id")).alias(
-            "average_transaction_value"
-        ),
     )
 
 
@@ -279,22 +265,34 @@ def _order_grain_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _retention_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The testdata master has income = o_totalprice, which is never 0,
+    so the retention query's income=0 branch would be vacuous. The
+    fixture maps income to 0 for a deterministic 1/7th of transactions
+    (o_orderkey % 7 = 0) so both CASE branches are exercised; the
+    pipeline tests cover the literal >0/=0 semantics on generated
+    fixtures with real zero incomes. The remap keys on transaction_id,
+    which is order-level, so it commutes with the grain change."""
+    return _order_grain_semi(spark, sf_dir).withColumn(
+        "income",
+        F.when(F.col("transaction_id") % 7 == 0, F.lit(0.0)).otherwise(
+            F.col("income")
+        ),
+    )
+
+
 def _orderpart_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(orders-row x part) grain for the product-keyed KPIs (A4/A5):
     lineitem pre-aggregated by (l_orderkey, l_partkey) into ``_n`` (row
     multiplicity) and ``_q`` (unscaled-long quantity sum), then joined
     to orders and customer. The pre-agg shuffles four longs instead of
-    the 11-column partial-aggregate state the master-grain plan
-    exchanges, and collapses the lineitem grain BEFORE the joins.
-
-    EXACTNESS (same argument as _order_grain): quantity is the only
-    lineitem-grain measure these KPIs touch and it pre-sums exactly as
-    unscaled longs; all other measures are order-level and weight by
-    ``_n``.
+    an 11-column partial-aggregate state, and collapses the lineitem
+    grain BEFORE the joins. Quantity is the only lineitem-grain measure
+    these KPIs touch, and it pre-sums exactly as unscaled longs.
     transaction_count must REMAIN a COUNT(DISTINCT o_orderkey) here —
     two identical-keyed orders rows (dupkeys variant has 150) land in
     the same group as two grain rows, and only distinct-counting
-    collapses them the way the master-grain plan does."""
+    collapses them the way the master does."""
     t = load_testdata(spark, sf_dir, ("customer", "orders", "lineitem"))
     # _q stays unscaled (quantity <= 50 -> per-order-part sums are
     # tiny); _total_quantity() rescales once per output group.
@@ -323,76 +321,20 @@ def _orderpart_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _total_quantity() -> Column:
-    """SUM of the _q pre-sums back to DOUBLE (grain-matched finisher)."""
-    return money_total(F.sum(F.col("_q")))
+def _query(kpi, grain):
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return kpi(grain(spark, sf_dir))
+
+    return query
 
 
-def _b_profitability_kpi_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _orderpart_grain(spark, sf_dir)
-    return g.groupBy(
-        "product_id", F.col("transaction_country").alias("country")
-    ).agg(
-        _total_quantity().alias("total_quantity"),
-        _wsum("income").alias("total_income"),
-        (_wsum("income") / _wcount("income")).alias("average_income"),
-        _wsum_diff("income", "campaign_cost").alias("total_profit"),
-    )
-
-
-def _b_product_performance_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _orderpart_grain(spark, sf_dir)
-    return g.groupBy(
-        "product_id",
-        F.col("transaction_country").alias("country"),
-        F.to_date("transaction_datetime").alias("date"),
-    ).agg(
-        F.countDistinct("transaction_id").alias("transaction_count"),
-        _total_quantity().alias("total_quantity"),
-        _wsum("income").alias("total_income"),
-        (_wsum("income") / _wcount("income")).alias("average_income"),
-        _wsum_diff("income", "campaign_cost").alias("total_profit"),
-        (_wsum("income") / F.countDistinct("transaction_id")).alias(
-            "average_transaction_value"
-        ),
-    )
-
-
-def _b_customer_retention_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the fixture income remap keys on transaction_id — order-level, so
-    # it commutes with the grain change; the retention aggregates are
-    # all COUNT(DISTINCT ...), which need no multiplicity at all.
-    g = _order_grain_semi(spark, sf_dir).withColumn(
-        "income",
-        F.when(F.col("transaction_id") % 7 == 0, F.lit(0.0)).otherwise(
-            F.col("income")
-        ),
-    )
-    # Three conditional COUNT(DISTINCT)s force Catalyst's Expand-x3
-    # distinct rewrite; a two-phase plan avoids it: collapse to one row
-    # per (group, customer) carrying ANY-row flags, then plain counts.
-    # Exactness: COUNT(DISTINCT CASE WHEN p THEN k END) counts distinct
-    # non-NULL k having at least one p-true row in the group — exactly
-    # count(when(max(p), k)) over the collapsed rows. max(bool) is
-    # NULL-skipping like the CASE (all-NULL predicate -> NULL -> not
-    # counted); NULL k stays a group key here but count(k) skips it.
-    country, date = _country_date()
-    per_customer = g.groupBy(
-        country, date, F.col("customer_id")
-    ).agg(
-        F.max(F.col("income") > 0).alias("_paying"),
-        F.max(F.col("income") == 0).alias("_non_paying"),
-    )
-    return per_customer.groupBy("country", "date").agg(
-        F.count("customer_id").alias("unique_customers"),
-        F.count(F.when(F.col("_paying"), F.col("customer_id"))).alias(
-            "paying_customers"
-        ),
-        F.count(
-            F.when(F.col("_non_paying"), F.col("customer_id"))
-        ).alias("non_paying_customers"),
-    )
-
+QUERIES = {
+    "b_sales_kpi": _query(b_sales_kpi, _order_grain),
+    "b_performance_metrics": _query(b_performance_metrics, _order_grain),
+    "b_customer_retention": _query(b_customer_retention, _retention_grain),
+    "b_profitability_kpi": _query(b_profitability_kpi, _orderpart_grain),
+    "b_product_performance": _query(b_product_performance, _orderpart_grain),
+}
 
 _RETENTION_MASTER_SQL = f"""
 SELECT * REPLACE (
@@ -400,20 +342,6 @@ SELECT * REPLACE (
 ) FROM ({MASTER_ORACLE})
 """
 
-
-QUERIES = {
-    # A1-A3 run the order-grain fast path (identical results, proven
-    # against the unchanged master oracle); the reference-shaped
-    # BUILDERS above stay the pipeline's master-layer implementation.
-    "b_sales_kpi": _b_sales_kpi_fast,
-    "b_performance_metrics": _b_performance_metrics_fast,
-    "b_customer_retention": _b_customer_retention_fast,
-    # A4/A5 group on product_id, so they keep the lineitem dimension —
-    # but quantity is the only lineitem-grain measure, so the
-    # (orders-row x part) pre-aggregated grain is exact for them too.
-    "b_profitability_kpi": _b_profitability_kpi_fast,
-    "b_product_performance": _b_product_performance_fast,
-}
 
 #: Oracle SQL per business table, templated on the master relation —
 #: rendered against the testdata master for the driver, and against the

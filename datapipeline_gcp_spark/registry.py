@@ -119,7 +119,7 @@ _RECHECK: dict[str, int] = {
     "graph_triangles": 14,
     "udf_nfkc_normalize": 14,
     # r14: every query whose money aggregates moved to the unscaled-long
-    # sum (determinism.dsum/davg/dsum_diff, the business weighted sums,
+    # sum (determinism.dsum, the business weighted sums,
     # and the report template's Spark-dialect rendering) — the
     # implementing expression changed under them.
     "b_sales_kpi": 14,

@@ -16,6 +16,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """48g, or three quarters of physical memory on a smaller host: a
+    heap the host cannot back fails late (OOM kill) instead of early."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_mb = physical * 3 // 4 >> 20
+    return "48g" if heap_mb >= 48 << 10 else f"{heap_mb}m"
+
+
 def get_session(
     app_name: str = "datapipeline_gcp_spark",
     master: str | None = None,
@@ -67,7 +75,8 @@ def get_session(
         # Spark's 1g default OOMs real work; overridable via env or
         # extra_conf (a cluster deployment sets executor memory instead).
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()),
         )
     )
     if warehouse_dir:

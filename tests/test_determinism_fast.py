@@ -18,12 +18,11 @@ from pyspark.sql import functions as F
 from datapipeline_gcp_spark.determinism import (
     dec,
     dsum,
-    dsum_diff,
     money_total,
     money_unscaled,
     sql_dsum_fast,
 )
-from datapipeline_gcp_spark.operators.business import _wsum
+from datapipeline_gcp_spark.operators.business import _wsum, _wsum_diff
 
 # money-domain values: <=4 decimal digits, mixed signs/magnitudes,
 # including the awkward binary cases (x*1e4 not exactly integral).
@@ -83,10 +82,12 @@ def test_dsum_bitwise_equals_exact_path(spark):
     rows = [Row(g=i % 3, x=v, y=MONEY[(i + 5) % len(MONEY)])
             for i, v in enumerate(MONEY + SPECIALS)]
     df = spark.createDataFrame(rows, "g int, x double, y double")
-    fast = df.groupBy("g").agg(
+    # the business measures read a multiplicity column; _n = 1 is the
+    # master grain
+    fast = df.withColumn("_n", F.lit(1)).groupBy("g").agg(
         dsum("x").alias("s"),
         (dsum("x") / F.count("x")).alias("a"),
-        dsum_diff("x", "y").alias("d"),
+        _wsum_diff("x", "y").alias("d"),
     )
     exact = df.groupBy("g").agg(
         F.sum(dec("x")).cast("double").alias("s"),

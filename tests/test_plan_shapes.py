@@ -10,11 +10,14 @@ only, no job, so the whole module costs seconds.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
 
 from datapipeline_gcp_spark import registry
 
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 
 _QUERIES = registry.all_queries()
 
@@ -430,3 +433,57 @@ def test_multimodal_stream_payload_stays_below_the_hash_boundary(spark, tmp_path
     above = "\n".join(lines[:boundary])
     assert "DeduplicateWithinWatermark" in above  # stateful op above the boundary
     assert "payload" not in above  # bytes never cross it
+
+
+#: sha256 of each registry business query's normalized optimized +
+#: executed plan at sf0.001 (see ``_business_plan_text``). The hashes
+#: were computed before the KPI builders were folded into one function
+#: per KPI, so a match proves the registry plans did not move.
+_BUSINESS_PLAN_SHA256 = {
+    "b_sales_kpi": (
+        "df48ce0bdf816f2c05a6dbeab8ec7a61af002d202d20de3f1800863e4b8d14a3"
+    ),
+    "b_performance_metrics": (
+        "d7951f488dd803191d18e4ef582c27d5eaebf63fa05eec755cdee282cf84ee70"
+    ),
+    "b_customer_retention": (
+        "ec021e9698864d0e28a736988fb0f2a7d3266d3336d539b8b078f18976f16c21"
+    ),
+    "b_profitability_kpi": (
+        "794e3da1131840e7350b30d00e390d19ec18459e684c870cce4a313ee58e8079"
+    ),
+    "b_product_performance": (
+        "a41f13a657b66d93842ac75275af6af0a65b9ada9f0eeea9dcfc29da3f806ffe"
+    ),
+}
+
+#: shuffle width is a host property (one partition per core); pinned
+#: while planning so the hashes do not depend on the core count.
+_PLAN_PIN_PARTITIONS = "4"
+
+
+def _business_plan_text(spark, name: str) -> str:
+    """Optimized + executed plan of a registry query with expression
+    ids, plan ids and file locations blanked."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, _PLAN_PIN_PARTITIONS)
+    try:
+        qe = _QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution()
+        text = f"{qe.optimizedPlan().toString()}\n{qe.executedPlan().toString()}"
+    finally:
+        spark.conf.set(key, old)
+    text = re.sub(r"#\d+L?", "#", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    return re.sub(r"Location: \w+\(\d+ paths\)\[[^\]]*\]", "Location: ", text)
+
+
+def test_business_registry_plans_pinned(spark):
+    """The five registry KPI queries plan exactly as pinned: their
+    optimized and executed plans are string-equal, up to ids and file
+    locations, to the plans the hashes were taken from."""
+    got = {
+        name: hashlib.sha256(_business_plan_text(spark, name).encode()).hexdigest()
+        for name in _BUSINESS_PLAN_SHA256
+    }
+    assert got == _BUSINESS_PLAN_SHA256

@@ -8,7 +8,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark.functions.dedup import within_block_pairs
-from datapipeline_gcp_spark.operators.business import b_performance_metrics
+from datapipeline_gcp_spark.operators.business import BUILDERS
 from datapipeline_gcp_spark.operators.master import master_join
 from datapipeline_gcp_spark.sources import generators as gen
 
@@ -25,7 +25,7 @@ def test_profit_identity_per_group(spark, n, seed):
     t = gen.gen_transactions(spark, n=n, seed=seed + 1)
     s = gen.gen_sales(spark, t, seed=seed + 2)
     m = master_join(c, t, s)
-    pdf = b_performance_metrics(m).toPandas()
+    pdf = BUILDERS["b_performance_metrics"](m).toPandas()
     if len(pdf):
         # each aggregate is exact in decimal space but independently
         # rounded to DOUBLE on output, so the identity holds to ulps,

@@ -13,8 +13,8 @@ The two agree whenever x is a "money-domain" double: the nearest double
 to a value whose decimal expansion terminates within 4 fractional
 digits, with |x| <= ~1e11 (see determinism.py for the error bound).
 This sweep *proves the data parity* exhaustively: for every (table,
-expression) that any dsum/davg/dsum_diff call site, business weighted
-sum or window money sum feeds, it counts rows where
+expression) that any dsum call site, business weighted sum or window
+money sum feeds, it counts rows where
 
     CAST(CAST(x AS DECIMAL(18,4)) * 10000 AS BIGINT)   -- decimal cast
 is not null-safe-equal to
@@ -42,8 +42,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from datapipeline_gcp_spark.determinism import dec, money_unscaled  # noqa: E402
 
 #: every (table, SQL expression) a money sum consumes anywhere in the
-#: engine (dsum/davg/dsum_diff call sites, business weighted sums, the
-#: window running/rolling sums).
+#: engine (dsum call sites, business weighted sums, the window
+#: running/rolling sums).
 EXPRS = [
     ("orders", "o_totalprice"),
     ("orders", "o_totalprice * 0.1"),          # relational.commission
