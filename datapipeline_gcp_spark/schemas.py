@@ -16,6 +16,11 @@ CTE report's explicit ``CAST(... AS FLOAT64)`` (reference
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
@@ -137,17 +142,156 @@ def pin_utc(spark) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+#: Parquet leaf ``(physical type, logical type)`` -> the Spark type that
+#: Spark 4.1's parquet schema inference gives it. Int, Decimal and
+#: Timestamp leaves are resolved in :func:`_leaf_type`.
+_LEAF = {
+    ("BOOLEAN", "None"): T.BooleanType(),
+    ("INT32", "None"): T.IntegerType(),
+    ("INT64", "None"): T.LongType(),
+    ("INT96", "None"): T.TimestampType(),
+    ("FLOAT", "None"): T.FloatType(),
+    ("DOUBLE", "None"): T.DoubleType(),
+    ("BYTE_ARRAY", "None"): T.BinaryType(),
+    ("FIXED_LEN_BYTE_ARRAY", "None"): T.BinaryType(),
+    ("BYTE_ARRAY", "String"): T.StringType(),
+    ("INT32", "Date"): T.DateType(),
+}
+
+#: ``(bitWidth, isSigned)`` of a parquet Int annotation -> Spark type.
+_INT = {
+    (8, True): T.ByteType(),
+    (16, True): T.ShortType(),
+    (32, True): T.IntegerType(),
+    (64, True): T.LongType(),
+    (8, False): T.ShortType(),
+    (16, False): T.IntegerType(),
+    (32, False): T.LongType(),
+    (64, False): T.DecimalType(20, 0),
+}
+
+
+def _leaf_type(leaf, ntz: bool) -> T.DataType:
+    logical = json.loads(leaf.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Decimal":
+        return T.DecimalType(leaf.precision, leaf.scale)
+    if kind == "Int":
+        return _INT[(logical["bitWidth"], logical["isSigned"])]
+    if kind == "Timestamp":
+        if logical["timeUnit"] == "nanoseconds":
+            return T.LongType()
+        if ntz and not logical["isAdjustedToUTC"]:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+    try:
+        return _LEAF[(leaf.physical_type, kind)]
+    except KeyError:
+        raise ValueError(
+            f"parquet column {leaf.path!r} has type {leaf.physical_type} "
+            f"{leaf.logical_type}, which the footer schema resolver does not map"
+        ) from None
+
+
+def _spark_type(t: pa.DataType, leaves, ntz: bool, name: str) -> T.DataType:
+    """Spark type of an arrow field; ``leaves`` yields the footer's leaf
+    columns in order, so each primitive reads its own parquet types."""
+    if pa.types.is_struct(t):
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type, leaves, ntz, name)) for f in t]
+        )
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return T.ArrayType(_spark_type(t.value_type, leaves, ntz, name))
+    if pa.types.is_nested(t):
+        raise ValueError(
+            f"parquet column {name!r} has type {t}, which the footer schema "
+            "resolver does not map"
+        )
+    return _leaf_type(next(leaves), ntz)
+
+
+#: Footer key under which Spark's own parquet writer stores the Spark
+#: schema; inference takes it verbatim (made nullable) when present.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(schema_json):
+    """A Spark schema's JSON with every field, element and value nullable."""
+    if isinstance(schema_json, list):
+        return [_nullable(v) for v in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull") else _nullable(v)
+        for k, v in schema_json.items()
+    }
+
+
+def _footer_file(path: str) -> str | None:
+    """The local file whose footer Spark reads for ``path`` without
+    ``mergeSchema``: the path itself, or a directory's first data file
+    (names starting ``_`` or ``.`` are not data). None for a URI or a
+    directory without data files at its top level (partitioned)."""
+    if "://" in path:
+        return None
+    if not os.path.isdir(path):
+        return path
+    data = sorted(
+        n
+        for n in os.listdir(path)
+        if not n.startswith(("_", ".")) and os.path.isfile(os.path.join(path, n))
+    )
+    return os.path.join(path, data[0]) if data else None
+
+
+def parquet_schema(spark, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, resolved on the
+    driver from one parquet footer, so it starts no Spark job.
+
+    The mapping is Spark 4.1's inference: every field is nullable, lists
+    become ``ArrayType(containsNull=True)``, a naive µs/ms timestamp is
+    TIMESTAMP_NTZ (TIMESTAMP when the session turns
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` off), a UTC-adjusted
+    or INT96 one is TIMESTAMP, and a NANOS timestamp is ``bigint`` raw
+    nanos (inference rejects NANOS unless a legacy conf is set, but the
+    reader takes it under a declared long with none). A type outside the
+    mapping raises ``ValueError`` naming the column. A path pyarrow
+    cannot open (a URI, a partitioned directory) falls back to Spark's
+    own inference. A footer written by Spark carries its Spark schema,
+    which inference (and so this) takes as it is."""
+    footer = _footer_file(path)
+    try:
+        meta = pq.read_metadata(footer) if footer else None
+    except (OSError, pa.ArrowInvalid):
+        meta = None
+    if meta is None:
+        return spark.read.parquet(path).schema
+    written_by_spark = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if written_by_spark:
+        return T.StructType.fromJson(_nullable(json.loads(written_by_spark)))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled").lower() == "true"
+    leaves = (meta.schema.column(i) for i in range(meta.num_columns))
+    return T.StructType(
+        [
+            T.StructField(f.name, _spark_type(f.type, leaves, ntz, f.name))
+            for f in meta.schema.to_arrow_schema()
+        ]
+    )
+
+
 def load_testdata(spark, sf_dir: str, tables=TESTDATA_TABLES) -> dict:
     """Read the driver-provided parquet tables and register temp views.
 
-    Returns ``{name: DataFrame}``. Parquet scans get column pruning and
-    predicate pushdown from Catalyst automatically.
+    Returns ``{name: DataFrame}``. Each table is read under the schema
+    :func:`parquet_schema` resolves from its footer on the driver, so
+    loading starts no Spark job and sets no session conf. Parquet scans
+    get column pruning and predicate pushdown from Catalyst
+    automatically.
 
-    ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which
-    Spark's reader rejects outright; it is read as raw nanos via the
-    ``nanosAsLong`` legacy conf (session-settable, so this works in any
-    caller's session) and converted to a microsecond TIMESTAMP — the
-    data is µs-resolution, so the conversion is lossless.
+    ``events.ts`` is naive TIMESTAMP(MICROS) in current fixtures (read as
+    TIMESTAMP_NTZ); older ones store TIMESTAMP(NANOS), which resolves to
+    raw nanos as ``bigint`` and is converted here to a microsecond
+    TIMESTAMP — the data is µs-resolution, so the conversion is lossless.
     """
     from pyspark.sql import functions as F
 
@@ -156,13 +300,10 @@ def load_testdata(spark, sf_dir: str, tables=TESTDATA_TABLES) -> dict:
     out = {}
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            if dict(df.dtypes).get("ts") == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = spark.read.parquet(path)
+        schema = parquet_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

@@ -50,6 +50,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapipeline_gcp_spark.schemas import parquet_schema
+
 GATE_SHUFFLE_PARTITIONS = "8"
 
 #: The event-time validity window for streaming ingest. Half-open
@@ -133,13 +135,15 @@ def path_is_directory(spark: SparkSession, path: str) -> bool:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared gate source: ``readStream`` over the driver's events
-    parquet with ``ts`` normalized to TIMESTAMP (the fixtures carry
-    either µs-instant or NTZ/nanos-as-long timestamps depending on the
+    parquet with ``ts`` normalized to TIMESTAMP. The stream's schema is
+    :func:`schemas.parquet_schema`, resolved from the parquet footer on
+    the driver, the same path ``load_testdata`` reads through, so no
+    session conf is set. The fixtures carry either naive µs (NTZ) or
+    NANOS (resolved as ``bigint`` nanos) timestamps depending on the
     writer; watermarks require the instant type — session pinned UTC
-    makes the cast wall-clock identity)."""
+    makes the cast wall-clock identity."""
     path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     if path_is_directory(spark, path):
         # small-files layout (manyfiles variant; the production shape —
         # a lake prefix holding many part files): stream the directory
