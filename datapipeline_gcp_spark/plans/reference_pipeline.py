@@ -26,6 +26,8 @@ Differences from the reference, all deliberate and documented:
 
 from __future__ import annotations
 
+import glob as globlib
+
 from pyspark.sql import functions as F
 
 from datapipeline_gcp_spark import schemas, sinks
@@ -36,12 +38,22 @@ from datapipeline_gcp_spark.sources import generators as gen
 from datapipeline_gcp_spark.sources import readers
 
 
+def _landed(pattern: str) -> list[str]:
+    """The sorted landing files matching *pattern*. Spark gets the file
+    list, not the glob: a glob path makes it look for a streaming-sink
+    metadata directory under a path that does not exist, and log a WARN
+    with a FileNotFoundException stack trace on every load."""
+    files = sorted(globlib.glob(pattern))
+    if not files:
+        raise FileNotFoundError(f"no landing file matches {pattern}")
+    return files
+
+
 def _load_raw(ctx: Context, fmt: str, table: str, schema, landing_dir: str, mode: str):
     """Read one (table, format) landing glob and land it in raw_layer."""
-    glob = f"{landing_dir}/{fmt}/{table}_{ctx.run_date}_*.{fmt}"
-    reader = readers.read_tsv if fmt == "txt" else readers.read_csv
+    files = _landed(f"{landing_dir}/{fmt}/{table}_{ctx.run_date}_*.{fmt}")
     df = (
-        reader(ctx.spark, glob, schema)
+        readers.read_landing(ctx.spark, files, schema, fmt)
         .withColumn("load_date", F.lit(ctx.run_date))
         # src_format keeps the CSV and TXT loads of the same run date on
         # disjoint partitions: in overwrite_run mode each format replaces
@@ -113,10 +125,11 @@ def build_reference_pipeline(
     # database_sql group: the Cloud SQL export → snapshot-CSV → load path
     # (sales derives from the CSV transactions batch, FK-aligned).
     def export_sales(c: Context):
-        tranx = readers.read_csv(
+        tranx = readers.read_landing(
             c.spark,
-            f"{landing_dir}/csv/transactions_{c.run_date}_*.csv",
+            _landed(f"{landing_dir}/csv/transactions_{c.run_date}_*.csv"),
             schemas.TRANSACTIONS,
+            "csv",
         )
         sales = gen.gen_sales(c.spark, tranx)
         gen.write_landing_file(sales, landing_dir, "sales", "csv", c.run_date)
@@ -183,17 +196,5 @@ def build_reference_pipeline(
         p.step(name, business(name), deps=[mst], group="business", **kw)
         for name in biz.BUILDERS
     ]
-    # CBO statistics on the master table (join-key + group-key columns)
-    # run alongside the business queries — they feed the NEXT run's plans.
-    stats = p.step(
-        "analyze_master",
-        lambda c: sinks.analyze_table(
-            c.spark,
-            "master_layer.m_data_model",
-            ["transaction_country", "transaction_id", "product_id"],
-        ),
-        deps=[mst],
-        **kw,
-    )
-    p.step("end", deps=biz_steps + [stats])
+    p.step("end", deps=biz_steps)
     return p

@@ -89,18 +89,16 @@ _RECHECK: dict[str, int] = {
     # r8-r12 registry history for per-sweep rationale. r13 is the
     # pin-light window VERDICT r12 #2 asks for: only genuinely
     # rewritten code paths below, so the r8-stale tail rotates in.)
-    # r13: sinks._table_lock gained a cross-process warehouse flock
-    # (VERDICT r12 #7) and stream_landing_table a trigger_interval
-    # mode — the shared write/ingest path of all five landing gates
-    # (dedup_stream_incremental_gate also writes its bucketed index
-    # through the locked sink). Pin policy is code, not belief.
-    "events_stream_e2e_ingest_gate": 13,
-    "events_stream_crossrun_redelivery_gate": 13,
-    "events_stream_idempotent_replay_gate": 13,
-    "multimodal_stream_ingest_gate": 13,
-    # (13 → 14: r14 folded the gate's day-0 component-map copy into the
-    # first merge — rewritten again after its r13 green.)
-    "dedup_stream_incremental_gate": 14,
+    # r15: the five landing gates' streams now read through the landing
+    # contract (landing_format.with_format): stream_landing_table and
+    # the quarantine scan parse text landing files in FAILFAST mode, and
+    # dedup_stream_incremental_gate's docs stream takes the parquet
+    # format from the same table. Pin policy is code, not belief.
+    "events_stream_e2e_ingest_gate": 15,
+    "events_stream_crossrun_redelivery_gate": 15,
+    "events_stream_idempotent_replay_gate": 15,
+    "multimodal_stream_ingest_gate": 15,
+    "dedup_stream_incremental_gate": 15,
     # r13: the sessionizer's entry now parses gap/watermark for the
     # ms-grid warning (VERDICT r12 #6) — same module + call path.
     "events_stream_stateful_session_gate": 13,

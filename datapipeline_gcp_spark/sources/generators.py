@@ -31,10 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_gcp_spark.landing_format import (
-    TEXT_WRITE_OPTS,
-    with_text_options,
-)
+from datapipeline_gcp_spark.landing_format import with_format
 
 COUNTRIES = ("Peru", "Chile", "Colombia", "Mexico", "Argentina", "Bolivia")
 #: Probability weight of the hot country: ids ≡ 0..5 (mod 10) → Peru.
@@ -245,27 +242,8 @@ def write_landing_file(
     fname = f"{table}_{run_date}_{uuid.uuid4().hex[:8]}.{fmt}"
     os.makedirs(f"{landing_dir}/{fmt}", exist_ok=True)
     tmp = f"{landing_dir}/.tmp_{uuid.uuid4().hex[:8]}"
-    out = df
-    if fmt in ("csv", "txt"):
-        for name, dtype in df.dtypes:
-            if dtype == "timestamp":
-                out = out.withColumn(
-                    name, F.date_format(name, "yyyy-MM-dd HH:mm:ss")
-                )
-    writer = out.coalesce(1).write.mode("overwrite")
-    if fmt in ("csv", "txt"):
-        # round-trip fidelity: preserve whitespace verbatim, encode
-        # NULL as the \N sentinel so it stays distinct from "" on
-        # ingest (see landing_format docstring; r10 blanktext sweep)
-        writer = with_text_options(writer, TEXT_WRITE_OPTS)
-    if fmt == "csv":
-        writer.option("header", True).csv(tmp)
-    elif fmt == "txt":
-        writer.option("header", False).option("sep", "\t").csv(tmp)
-    elif fmt == "parquet":
-        writer.parquet(tmp)
-    else:
-        raise ValueError(f"unsupported landing format: {fmt}")
+    # text timestamps, whitespace and NULLs per the landing contract
+    with_format(df.coalesce(1).write.mode("overwrite"), fmt).save(tmp)
     part = next(p for p in os.listdir(tmp) if p.startswith("part-"))
     dest = f"{landing_dir}/{fmt}/{fname}"
     shutil.move(f"{tmp}/{part}", dest)

@@ -6,13 +6,19 @@
 - S2 TSV: tab-separated, NO header — the format the reference routed
   through an ephemeral Dataproc cluster + external PySpark script
   (``datapipeline_gcp.py:77-83,320-325``; file format produced at
-  ``cloud_function/create_campaigns/txt/main.py:30``). Here it is just a
-  reader option; no cluster lifecycle exists.
+  ``cloud_function/create_campaigns/txt/main.py:30``). Here it is just
+  another landing format; no cluster lifecycle exists.
+
+  S1 and S2 are one reader, :func:`read_landing` with ``fmt="csv"`` or
+  ``fmt="txt"``. The format's options and its FAILFAST parse mode come
+  from ``landing_format.FORMATS``, the table the writer and the
+  event-path streams use too, so the DAG load and the stream parse a
+  landing file identically.
 - S3 snapshot: the Cloud SQL ``SELECT *``-export-then-load path
   (``datapipeline_gcp.py:36,85-93,372-388``) — the exported snapshot
-  is plain CSV read by :func:`read_csv`; a JDBC reader covers live
-  databases (needs a JDBC driver jar on the classpath; gated, since none
-  ships in this environment).
+  is a plain landing CSV read by :func:`read_landing`; a JDBC reader
+  covers live databases (needs a JDBC driver jar on the classpath;
+  gated, since none ships in this environment).
 - S5 batch sensor: glob-nonempty existence check with timeout
   (``datapipeline_gcp.py:204-218``).
 
@@ -35,44 +41,40 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from datapipeline_gcp_spark.landing_format import (
-    EXTERNAL_TEXT_READ_OPTS,
-    TEXT_READ_OPTS,
-    with_text_options,
-)
+from datapipeline_gcp_spark.landing_format import with_format
 
 
-def _reader(spark: SparkSession, schema: T.StructType, permissive: bool):
-    mode = "PERMISSIVE" if permissive else "FAILFAST"
-    if permissive:
-        schema = T.StructType(
-            schema.fields + [T.StructField("_corrupt_record", T.StringType())]
-        )
-    return spark.read.schema(schema).option("mode", mode)
+def _reader(reader, schema: T.StructType, permissive: bool):
+    """Declare *schema*; ``permissive=True`` quarantines instead of
+    failing: malformed rows land in ``_corrupt_record``."""
+    if not permissive:
+        return reader.schema(schema)
+    schema = T.StructType(
+        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    return reader.schema(schema).option("mode", "PERMISSIVE")
 
 
-def read_csv(
+def read_landing(
     spark: SparkSession,
-    path_glob: str,
+    paths: str | list[str],
     schema: T.StructType,
-    header: bool = True,
+    fmt: str,
     permissive: bool = False,
     external: bool = False,
     external_multiline: bool = True,
 ) -> DataFrame:
-    """S1 — CSV landing files with a header row and declared schema.
+    """S1/S2 — landing files of format *fmt* (``csv``, ``txt`` or
+    ``parquet``) with a declared schema, parsed by the landing contract
+    (``landing_format.FORMATS``): the same options and FAILFAST mode the
+    event-path streams use, and the round trip of ``write_landing_file``
+    (\\N NULL sentinel, "" stays a string, multiLine for quoted embedded
+    newlines). *paths* is a path, a glob or a list of files.
 
-    By default the reader assumes THIS repo's landing convention:
-    TEXT_READ_OPTS (\\N NULL sentinel, "" stays a string, multiLine for
-    quoted embedded newlines) is the round-trip contract with
-    ``write_landing_file`` — CSV/TSV ONLY: ``multiLine`` means
-    one-JSON-document-per-FILE to the JSON reader, so applying these in
-    the shared ``_reader`` broke JSONL (r10 blanktext sweep).
-
-    ``external=True`` reads files produced by OTHER writers (e.g. the
-    reference's plain ``csv.writer``, which encodes NULL as a bare empty
-    field): the sentinel options are skipped, so an empty field is NULL
-    for every type — the standard CSV reading (ADVICE r10: under the
+    ``external=True`` reads text files produced by OTHER writers (e.g.
+    the reference's plain ``csv.writer``, which encodes NULL as a bare
+    empty field): the sentinel options are skipped, so an empty field is
+    NULL for every type — the standard CSV reading (ADVICE r10: under the
     default convention such files would ingest NULL string fields as
     ``""`` and could FAILFAST on empty typed fields). ``multiLine`` is
     KEPT in external mode (ADVICE r11): RFC-4180 writers quote embedded
@@ -81,41 +83,8 @@ def read_csv(
     for bulk external files KNOWN to be newline-free pass
     ``external_multiline=False`` to restore intra-file parallelism;
     correctness-by-default, splittability as the declared opt-in."""
-    reader = _reader(spark, schema, permissive)
-    if not external:
-        reader = with_text_options(reader, TEXT_READ_OPTS)
-    elif external_multiline:
-        reader = with_text_options(reader, EXTERNAL_TEXT_READ_OPTS)
-    return (
-        reader.option("header", header)
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .csv(path_glob)
-    )
-
-
-def read_tsv(
-    spark: SparkSession,
-    path_glob: str,
-    schema: T.StructType,
-    permissive: bool = False,
-    external: bool = False,
-    external_multiline: bool = True,
-) -> DataFrame:
-    """S2 — tab-separated, headerless landing files (TEXT_READ_OPTS and
-    the ``external`` opt-out for foreign writers: see :func:`read_csv`;
-    external mode keeps ``multiLine`` for quoted newlines unless
-    ``external_multiline=False`` opts back into splittable parsing)."""
-    reader = _reader(spark, schema, permissive)
-    if not external:
-        reader = with_text_options(reader, TEXT_READ_OPTS)
-    elif external_multiline:
-        reader = with_text_options(reader, EXTERNAL_TEXT_READ_OPTS)
-    return (
-        reader.option("sep", "\t")
-        .option("header", False)
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .csv(path_glob)
-    )
+    reader = with_format(spark.read, fmt, external, external_multiline)
+    return _reader(reader, schema, permissive).load(paths)
 
 
 def read_jdbc(
@@ -171,7 +140,8 @@ def read_jsonl(
 ) -> DataFrame:
     """JSON-lines landing files with a declared schema (never inferred —
     inference costs a full extra pass and drifts types at 100 TB)."""
-    return _reader(spark, schema, permissive).json(path_glob)
+    reader = spark.read.option("mode", "FAILFAST")
+    return _reader(reader, schema, permissive).json(path_glob)
 
 
 def read_orc(

@@ -44,15 +44,12 @@ from pyspark.sql import types as T
 
 from datapipeline_gcp_spark import sinks
 from datapipeline_gcp_spark.functions import clusters, dedup
-from datapipeline_gcp_spark.landing_format import (
-    TEXT_READ_OPTS,
-    with_text_options,
-)
 from datapipeline_gcp_spark.functions.multimodal import (
     PHASH_HASHED_CTES,
     ahash_stage,
     phash_stream_assets,
 )
+from datapipeline_gcp_spark.landing_format import with_format
 from datapipeline_gcp_spark.schemas import load_testdata, pin_utc
 from datapipeline_gcp_spark.sources.generators import write_landing_file
 from datapipeline_gcp_spark.streaming.dedup import (
@@ -134,14 +131,13 @@ def _drain_quarantine(
     redelivered objects). Production would use a durable dead-letter
     table + checkpoint instead."""
     src = (
-        with_text_options(
-            spark.readStream.schema(_CSV_SCHEMA)
-            .option("pathGlobFilter", "events_*.csv")
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-            .option("header", True),
-            TEXT_READ_OPTS,
+        with_format(
+            spark.readStream.schema(_CSV_SCHEMA).option(
+                "pathGlobFilter", "events_*.csv"
+            ),
+            "csv",
         )
-        .csv(f"{landing}/csv")
+        .load(f"{landing}/csv")
         .select("*", F.col("_metadata.file_path").alias("_src"))
     )
     ckpt = tempfile.mkdtemp(dir=root, prefix="qckpt_")
@@ -665,10 +661,13 @@ def dedup_stream_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame
 
         def run_once() -> None:
             q = (
-                spark.readStream.schema(_DOCS_LANDING_SCHEMA)
-                .option("maxFilesPerTrigger", 100)
-                .option("pathGlobFilter", "docs_*.parquet")
-                .parquet(f"{landing}/parquet")
+                with_format(
+                    spark.readStream.schema(_DOCS_LANDING_SCHEMA)
+                    .option("maxFilesPerTrigger", 100)
+                    .option("pathGlobFilter", "docs_*.parquet"),
+                    "parquet",
+                )
+                .load(f"{landing}/parquet")
                 .writeStream.foreachBatch(process)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)

@@ -29,6 +29,13 @@ glob plays the consumer's filename-parse-and-dispatch. The parse itself
 (P9 string ops on ``_metadata.file_path``) is exposed as
 ``parse_landing_filename`` for the shared-stream alternative.
 
+Parsing: each stream reads its format through the landing contract
+(``landing_format.with_format``), the options and FAILFAST parse mode
+the DAG's batch load (``readers.read_landing``) uses. The two paths
+parse a landing file identically: a malformed value fails its
+micro-batch (the query stops, ``drain`` raises, the file stays in
+landing and nothing of it is appended) instead of landing NULL.
+
 Scale notes: the file-source maxFilesPerTrigger caps per-batch work;
 checkpointed offsets make restarts exactly-once into the idempotent
 (partition-overwrite) sink or at-least-once into the append sink —
@@ -46,10 +53,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from datapipeline_gcp_spark import sinks
-from datapipeline_gcp_spark.landing_format import (
-    TEXT_READ_OPTS,
-    with_text_options,
-)
+from datapipeline_gcp_spark.landing_format import with_format
 
 
 def parse_landing_filename(col: F.Column) -> tuple[F.Column, F.Column]:
@@ -367,26 +371,13 @@ def stream_landing_table(
     path = f"{landing_dir}/{fmt}"
     stream_id = f"{table}_{fmt}"
     os.makedirs(path, exist_ok=True)
-    reader = (
+    # the batch load's options and FAILFAST mode (module docstring)
+    stream = with_format(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", f"{table}_*.{fmt}")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-    )
-    if fmt in ("csv", "txt"):
-        # decode the \N NULL sentinel, keep "" a string (round-trip
-        # contract with write_landing_file — landing_format.py)
-        reader = with_text_options(reader, TEXT_READ_OPTS)
-    if fmt == "txt":
-        stream = reader.option("sep", "\t").option("header", False).csv(path)
-    elif fmt == "parquet":
-        # typed/binary landing shards (multimodal assets): the payload
-        # column cannot ride a text format, and parquet keeps it
-        # column-chunked so a transform that never touches it skips the
-        # bytes at scan time
-        stream = reader.parquet(path)
-    else:
-        stream = reader.option("header", True).csv(path)
+        .option("pathGlobFilter", f"{table}_*.{fmt}"),
+        fmt,
+    ).load(path)
     stream = stream.select("*", F.col("_metadata.file_path").alias("_src"))
     if transform is not None:
         stream = transform(stream)

@@ -34,11 +34,11 @@ def test_cte_report_on_string_tables_matches_duckdb(spark, tmp_path):
     gen.write_landing_file(gen.gen_campaigns(spark, 300), landing, "campaigns", "csv", "20230601")
     gen.write_landing_file(gen.gen_transactions(spark, 300), landing, "transactions", "csv", "20230601")
 
-    camp = readers.read_csv(
-        spark, f"{landing}/csv/campaigns_*.csv", schemas.AS_LANDED["r_campaigns"]
+    camp = readers.read_landing(
+        spark, f"{landing}/csv/campaigns_*.csv", schemas.AS_LANDED["r_campaigns"], "csv"
     )
-    tranx = readers.read_csv(
-        spark, f"{landing}/csv/transactions_*.csv", schemas.AS_LANDED["r_transactions"]
+    tranx = readers.read_landing(
+        spark, f"{landing}/csv/transactions_*.csv", schemas.AS_LANDED["r_transactions"], "csv"
     )
     camp.createOrReplaceTempView("r_campaigns_landed")
     tranx.createOrReplaceTempView("r_transactions_landed")

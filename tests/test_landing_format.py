@@ -3,19 +3,25 @@
 The r10 `blanktext` degenerate sweep found Spark CSV defaults silently
 corrupting landed values (writer-side whitespace trim; "" collapsing to
 NULL on read; quoted embedded newlines sheared by the line-based
-reader). These tests pin the contract: write_landing_file → read_csv /
-read_tsv is the identity on string values, with the one documented
-exception (a literal ``\\N`` ingests as NULL — the sentinel collision
-inherent to any text NULL encoding).
+reader). These tests pin the contract on both read paths, the DAG's
+batch load (read_landing) and the event path's stream
+(stream_landing_table): write_landing_file → read is the identity on
+string values, with the one documented exception (a literal ``\\N``
+ingests as NULL — the sentinel collision inherent to any text NULL
+encoding), and a malformed value fails both paths alike.
 """
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import types as T
 
 from datapipeline_gcp_spark.landing_format import NULL_SENTINEL
 from datapipeline_gcp_spark.sources.generators import write_landing_file
-from datapipeline_gcp_spark.sources.readers import read_csv, read_tsv
+from datapipeline_gcp_spark.sources.readers import read_landing
+from datapipeline_gcp_spark.streaming.ingest import drain, stream_landing_table
 
 _SCHEMA = T.StructType(
     [
@@ -37,19 +43,36 @@ _CASES = [
 ]
 
 
-def _roundtrip(spark, tmp_path, fmt, reader):
+def _stream_into(spark, tmp_path, table, fmt, schema, target):
+    """Run one availableNow event-path stream over *tmp_path*'s landing
+    files of *table* into the scratch table *target*, and drain it."""
+    spark.sql(f"DROP TABLE IF EXISTS {target}")
+    drain(
+        stream_landing_table(
+            spark, str(tmp_path), table, fmt, schema, target,
+            f"{tmp_path}/archive", f"{tmp_path}/ckpt_{target}",
+        )
+    )
+    return spark.table(target)
+
+
+def _roundtrip(spark, tmp_path, fmt, path):
     df = spark.createDataFrame(
         [(i, v) for i, v, _ in _CASES], schema=_SCHEMA
     )
     write_landing_file(df, str(tmp_path), "rt", fmt, "20240101")
-    back = reader(
-        spark, f"{tmp_path}/{fmt}/rt_*.{fmt}", _SCHEMA
-    ).toPandas().set_index("id")["s"]
+    if path == "batch":
+        back = read_landing(spark, f"{tmp_path}/{fmt}/rt_*.{fmt}", _SCHEMA, fmt)
+    else:
+        back = _stream_into(spark, tmp_path, "rt", fmt, _SCHEMA, f"rt_stream_{fmt}")
+    back = back.toPandas().set_index("id")["s"]
+    assert len(back) == len(_CASES), (fmt, path, len(back))
     for i, _, want in _CASES:
         got = back[i]
         got = None if got is None or got != got else got
         assert got == want or (got is None and want is None), (
             fmt,
+            path,
             i,
             repr(got),
             repr(want),
@@ -57,11 +80,47 @@ def _roundtrip(spark, tmp_path, fmt, reader):
 
 
 def test_csv_landing_roundtrip_is_identity(spark, tmp_path):
-    _roundtrip(spark, tmp_path, "csv", read_csv)
+    _roundtrip(spark, tmp_path, "csv", "batch")
 
 
 def test_tsv_landing_roundtrip_is_identity(spark, tmp_path):
-    _roundtrip(spark, tmp_path, "txt", read_tsv)
+    _roundtrip(spark, tmp_path, "txt", "batch")
+
+
+@pytest.mark.parametrize("fmt", ["csv", "txt"])
+def test_stream_landing_roundtrip_is_identity(spark, tmp_path, fmt):
+    _roundtrip(spark, tmp_path, fmt, "stream")
+
+
+_COST_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("cost", T.DoubleType()),
+    ]
+)
+
+
+@pytest.mark.parametrize("fmt", ["csv", "txt"])
+def test_malformed_landing_value_fails_on_both_paths(spark, tmp_path, fmt):
+    """A landed ``cost`` of ``abc`` fails the DAG load and the event
+    path alike: the stream's micro-batch fails instead of appending the
+    row with ``cost = NULL``, its file stays in landing and no row of it
+    reaches the table."""
+    landed = spark.createDataFrame([(1, "10.5"), (2, "abc")], "id long, cost string")
+    write_landing_file(landed, str(tmp_path), "bad", fmt, "20240101")
+    files = os.listdir(f"{tmp_path}/{fmt}")
+
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        read_landing(spark, f"{tmp_path}/{fmt}/bad_*.{fmt}", _COST_SCHEMA, fmt).collect()
+
+    target = f"malformed_stream_{fmt}"
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        _stream_into(spark, tmp_path, "bad", fmt, _COST_SCHEMA, target)
+    assert os.listdir(f"{tmp_path}/{fmt}") == files
+    assert not os.path.isdir(f"{tmp_path}/archive") or not [
+        f for f in os.listdir(f"{tmp_path}/archive") if f.startswith("bad_")
+    ]
+    assert not spark.catalog.tableExists(target) or spark.table(target).count() == 0
 
 
 # --- property form: ARBITRARY text survives the landing round-trip ----------
@@ -96,7 +155,7 @@ def test_csv_roundtrip_property(spark, tmp_path_factory, vals):
     )
     write_landing_file(df, str(tmp), "rt", "csv", "20240101")
     back = (
-        read_csv(spark, f"{tmp}/csv/rt_*.csv", _SCHEMA)
+        read_landing(spark, f"{tmp}/csv/rt_*.csv", _SCHEMA, "csv")
         .toPandas()
         .set_index("id")["s"]
     )
@@ -138,7 +197,7 @@ def test_external_csv_reads_plain_writer_output(spark, tmp_path):
         w.writerow([2, "", ""])  # csv.writer's None → empty field
         w.writerow([3, "x,y", 9])
     got = (
-        read_csv(spark, str(path), _EXT_SCHEMA, external=True)
+        read_landing(spark, str(path), _EXT_SCHEMA, "csv", external=True)
         .toPandas()
         .set_index("id")
     )
@@ -162,7 +221,7 @@ def test_external_csv_quoted_embedded_newline(spark, tmp_path):
         w.writerow([1, "line one\nline two", 5])
         w.writerow([2, "plain", 6])
     got = (
-        read_csv(spark, str(path), _EXT_SCHEMA, external=True)
+        read_landing(spark, str(path), _EXT_SCHEMA, "csv", external=True)
         .toPandas()
         .set_index("id")
     )
@@ -186,8 +245,8 @@ def test_external_csv_splittable_optout(spark, tmp_path):
         for i in range(5):
             w.writerow([i, f"w{i}", i * 10])
     got = (
-        read_csv(
-            spark, str(path), _EXT_SCHEMA, external=True,
+        read_landing(
+            spark, str(path), _EXT_SCHEMA, "csv", external=True,
             external_multiline=False,
         )
         .toPandas()

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -104,3 +106,51 @@ def test_append_rerun_doubles_rows(spark, pipeline_run):
     # idempotent mode: dynamic partition overwrite restores the count
     sinks.overwrite_partitions(m, "master_layer.m_data_model", ["dt"])
     assert spark.table("master_layer.m_data_model").count() == before
+
+
+_SMOKE_DAG = """
+import sys
+from datapipeline_gcp_spark.plans.reference_pipeline import build_reference_pipeline
+from datapipeline_gcp_spark.session import get_session
+
+root = sys.argv[1]
+spark = get_session(
+    master="local[2]",
+    warehouse_dir=f"{root}/warehouse",
+    extra_conf={
+        "spark.driver.memory": "2g",
+        "spark.driver.extraJavaOptions": f"-Dderby.system.home={root}",
+    },
+)
+p = build_reference_pipeline(
+    f"{root}/landing", f"{root}/archive",
+    sizes={"campaigns": 100, "transactions": 100, "slots": 50},
+)
+results = p.run(spark, run_date="20230601")
+bad = {n: (r.status, r.error) for n, r in results.items() if r.status != "success"}
+assert not bad, bad
+spark.stop()
+"""
+
+
+def test_smoke_dag_logs_no_landing_glob_trace(tmp_path):
+    """Quiet happy path: a clean DAG run's landing loads log no WARN
+    stack trace. A glob path made Spark look for a streaming-sink
+    metadata directory under it and log ``WARN FileStreamSink`` with a
+    ``java.io.FileNotFoundException`` trace on each of the six loads;
+    the loads pass the matched file list instead. Own process, so the
+    JVM's stderr is this DAG run's alone."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SMOKE_DAG, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    noisy = [
+        line for line in proc.stderr.splitlines()
+        if "FileStreamSink" in line or "FileNotFoundException" in line
+    ]
+    assert not noisy, noisy[:5]

@@ -85,8 +85,8 @@ def test_permissive_read_quarantines_corrupt_rows(spark, tmp_path):
         "not_a_number,xx,Chile,whenever\n"
         "2,20.0,Chile,2023-06-01 10:00:00\n"
     )
-    df = readers.read_csv(
-        spark, str(path), schemas.CAMPAIGNS, permissive=True
+    df = readers.read_landing(
+        spark, str(path), schemas.CAMPAIGNS, "csv", permissive=True
     )
     rows = df.collect()
     good = [r for r in rows if r._corrupt_record is None]
@@ -97,7 +97,7 @@ def test_permissive_read_quarantines_corrupt_rows(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(Exception):
-        readers.read_csv(spark, str(path), schemas.CAMPAIGNS).collect()
+        readers.read_landing(spark, str(path), schemas.CAMPAIGNS, "csv").collect()
 
 
 def test_permissive_jsonl_quarantines_corrupt_lines(spark, tmp_path):
